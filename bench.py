@@ -126,21 +126,6 @@ def run_frontier(spark) -> dict:
                     os.environ.get("SPARK_GRAFT_FRONTIER_EXPECTED", "5000000")
                 ),
                 n_salts=max(4, cpus // 4),
-                # evaluate the bloom-tested candidates once (cached)
-                # instead of twice — same knob as the kernel segment
-                fpp_checkpoint_tested=os.environ.get(
-                    "SPARK_GRAFT_FRONTIER_FPP_CKPT", "0"
-                ) == "1",
-                # materialize the deduped winners before novel() (A/B:
-                # BENCH/ab_ckpt_disc_r7.json)
-                ckpt_discovered=os.environ.get(
-                    "SPARK_GRAFT_FRONTIER_CKPT_DISC", "1"
-                ) == "1",
-                # per-stage fetch/gate attribution (extract+dedup vs
-                # bloom+rescue vs robots gate) — profiling runs only
-                profile_stages=os.environ.get(
-                    "SPARK_GRAFT_FRONTIER_PROFILE", "0"
-                ) == "1",
             ),
         )
         scheduled = res.fetch_log.count()
@@ -224,17 +209,21 @@ def run_kernel(spark, n_urls: int) -> dict:
 
     # seen set: half the key space pre-seen (steady-state crawl shape).
     # SPARK_GRAFT_KERNEL_BLOOM picks the serving mode: broadcast (default,
-    # delta-broadcast numpy shards + pandas-UDF test), jvm (codegen'd
-    # BloomFilterMightContain, zero Python on the membership path),
-    # sharded (cogroup), off (exact anti-join only).
+    # delta-broadcast numpy shards + pandas-UDF test), sharded (cogroup),
+    # off (exact anti-join only).
     bloom_mode = os.environ.get("SPARK_GRAFT_KERNEL_BLOOM", "broadcast")
+    bloom_modes = ("broadcast", "sharded", "off")
+    if bloom_mode not in bloom_modes:
+        raise ValueError(
+            f"SPARK_GRAFT_KERNEL_BLOOM={bloom_mode!r}: valid modes are "
+            + ", ".join(bloom_modes)
+        )
     seen_state = SeenState(
         spark,
         num_partitions=cpus,
         expected_total=n_urls,
         use_bloom=bloom_mode != "off",
         broadcast_bloom=bloom_mode == "broadcast",
-        jvm_bloom=bloom_mode == "jvm",
         broadcast_max_delta=n_urls,  # the pre-seen half is one big delta
         # Evaluate the bloom-tested frame once (cached) instead of twice
         # (survivors build + probe scan) — DEFAULT ON since the r7 A/B on

@@ -82,55 +82,12 @@ def test_bloom_off_equivalence(spark, fixture_dir, oracle_result):
     assert _fetch_tuples(res.fetch_log) == _oracle_tuples(oracle_result)
 
 
-def test_fpp_checkpoint_tested_equivalence(spark, fixture_dir, oracle_result):
-    # CrawlConfig.fpp_checkpoint_tested (evaluate the bloom-tested
-    # candidates once, cached) must preserve exact fetch-log parity.
-    # (At this fixture's size novel() takes the branchy small-state
-    # shape — the slim-branch checkpoint itself is pinned row-exact in
-    # test_seen_bloom.test_slim_and_branchy_novel_shapes_agree; this
-    # test pins the config plumbing end-to-end.)
-    docs, seeds, robots, pol = _load_inputs(spark, fixture_dir)
-    res = run_crawl(
-        spark, docs, seeds, robots, pol,
-        CrawlConfig(max_rounds=5, use_bloom=True, num_partitions=4,
-                    expected_total=20_000, fpp_checkpoint_tested=True),
-    )
-    assert _fetch_tuples(res.fetch_log) == _oracle_tuples(oracle_result)
-
-
-def test_ckpt_discovered_off_equivalence(spark, fixture_dir, oracle_result):
-    # ckpt_discovered defaults True (the -25% materialization fix,
-    # BENCH/ab_ckpt_disc_r7.json) so the default path is exercised by
-    # every other test here; this pins the NON-default lazy path — the
-    # checkpoint must be semantically transparent in both directions.
-    docs, seeds, robots, pol = _load_inputs(spark, fixture_dir)
-    res = run_crawl(
-        spark, docs, seeds, robots, pol,
-        CrawlConfig(max_rounds=5, use_bloom=True, num_partitions=4,
-                    expected_total=20_000, ckpt_discovered=False),
-    )
-    assert _fetch_tuples(res.fetch_log) == _oracle_tuples(oracle_result)
-
-
 def test_bloom_sharded_equivalence(spark, fixture_dir, oracle_result):
     # cogroup-sharded bloom path (broadcast off) must match too
     docs, seeds, robots, pol = _load_inputs(spark, fixture_dir)
     res = run_crawl(
         spark, docs, seeds, robots, pol,
         CrawlConfig(max_rounds=3, use_bloom=True, broadcast_bloom=False,
-                    num_partitions=4, expected_total=20_000),
-    )
-    oracle3 = [t for t in _oracle_tuples(oracle_result) if t[0] < 3]
-    assert _fetch_tuples(res.fetch_log) == oracle3
-
-
-def test_bloom_jvm_equivalence(spark, fixture_dir, oracle_result):
-    # JVM BloomFilterMightContain serving mode (zero-Python membership)
-    # must schedule fetch-for-fetch identically too
-    docs, seeds, robots, pol = _load_inputs(spark, fixture_dir)
-    res = run_crawl(
-        spark, docs, seeds, robots, pol,
-        CrawlConfig(max_rounds=3, use_bloom=True, jvm_bloom=True,
                     num_partitions=4, expected_total=20_000),
     )
     oracle3 = [t for t in _oracle_tuples(oracle_result) if t[0] < 3]
@@ -219,19 +176,6 @@ def test_kill_with_uncommitted_deferred_rounds_resumes_exactly(
     assert resumed.rounds_run == 3
     assert _fetch_tuples(resumed.fetch_log) == _oracle_tuples(oracle_result)
     assert {r["surt"] for r in resumed.seen.collect()} == set(oracle_result.seen)
-
-
-def test_eager_state_checkpoints_equivalent(spark, fixture_dir, oracle_result):
-    """lazy_state_checkpoints=False (the r5 behavior: a dedicated
-    materialization job per carry-over table per round) must produce the
-    identical crawl — the lazy default only moves WHEN materialization
-    happens, never what is computed."""
-    docs, seeds, robots, pol = _load_inputs(spark, fixture_dir)
-    res = run_crawl(
-        spark, docs, seeds, robots, pol,
-        CrawlConfig(max_rounds=5, lazy_state_checkpoints=False),
-    )
-    assert _fetch_tuples(res.fetch_log) == _oracle_tuples(oracle_result)
 
 
 def test_delta_commits_write_round_delta_not_full_state(spark, fixture_dir, oracle_result, tmp_path):
@@ -488,19 +432,24 @@ def test_commit_every_validation(spark, fixture_dir):
                       CrawlConfig(max_rounds=1, commit_every=bad))
 
 
-def test_profile_stages_parity(spark, fixture_dir, oracle_result):
-    """profile_stages adds checkpoints + count jobs for attribution; the
-    crawl itself must be bit-identical, and the per-round timing rows
-    must carry the stage fields."""
+def test_resume_refuses_jvm_bloom_manifest(spark, fixture_dir, tmp_path):
+    """A store written by the removed JVM bloom serving mode holds a
+    BloomFilterImpl-layout bloom that the numpy double-hash shards cannot
+    read. Resume must refuse it from the manifest alone instead of
+    adopting its bits (which could re-schedule already-seen URLs)."""
+    import json
+
+    from warchaeology_spark.frontier.checkpoint import SnapshotStore
+
     docs, seeds, robots, pol = _load_inputs(spark, fixture_dir)
-    res = run_crawl(
-        spark, docs, seeds, robots, pol,
-        CrawlConfig(max_rounds=5, num_partitions=4, expected_total=20_000,
-                    profile_stages=True),
-    )
-    assert _fetch_tuples(res.fetch_log) == _oracle_tuples(oracle_result)
-    assert all(
-        {"extract_dedup_sec", "novel_filter_sec", "discovered_rows",
-         "novel_rows"} <= set(t)
-        for t in res.timings if t.get("round", 0) < res.rounds_run
-    )
+    root = str(tmp_path / "snap_jvm")
+    run_crawl(spark, docs, seeds, robots, pol,
+              CrawlConfig(max_rounds=1, store_root=root))
+    store = SnapshotStore(spark, root)
+    path = f"{root}/snapshots/{store.latest_version():08d}.json"
+    entry = json.loads(store._read_text(path))
+    entry["meta"]["seen_state"]["jvm_bloom"] = True
+    store._write_text(path, json.dumps(entry))
+    with pytest.raises(ValueError, match="JVM bloom"):
+        run_crawl(spark, docs, seeds, robots, pol,
+                  CrawlConfig(max_rounds=2, store_root=root, resume=True))

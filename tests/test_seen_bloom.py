@@ -38,15 +38,24 @@ def test_broadcast_bytes_track_delta_not_total(spark):
 
 def test_broadcast_chain_compacts(spark):
     st = SeenState(spark, num_partitions=4, expected_total=40_000, use_bloom=True)
-    for r in range(12):
+    compactions = 0
+    for r in range(6):
         st.add(_urls(spark, [4 * r]))  # every round dirties shard 0 only
-        st.novel(_urls(spark, [999_100 + r])).count()
-    # stale shard-0 entries are compacted away: chain stays bounded
-    entries = sum(len(bc.value) for bc in st._bc_chain)
-    live = len({p for bc in st._bc_chain for p in bc.value})
-    assert entries <= 2 * max(live, 1) + 1
+        # truncate the seen union each round, as run_crawl does
+        st.seen = st.seen.localCheckpoint(eager=True)
+        chain_before = len(st._bc_chain)
+        got = {x["url_hash"] for x in st.novel(_urls(spark, [4 * r, 999_100 + r])).collect()}
+        assert got == {999_100 + r}
+        # novel() appended this round's delta; a shorter chain than
+        # before + 1 means the stale shard-0 entries were compacted away
+        compactions += len(st._bc_chain) <= chain_before
+        # the chain stays bounded after EVERY round, not only at the end
+        entries = sum(len(bc.value) for bc in st._bc_chain)
+        live = len({p for bc in st._bc_chain for p in bc.value})
+        assert entries <= 2 * max(live, 1)
+    assert compactions >= 2
     # and the compacted chain still answers correctly
-    got = {r["url_hash"] for r in st.novel(_urls(spark, [0, 44, 999_999])).collect()}
+    got = {r["url_hash"] for r in st.novel(_urls(spark, [0, 20, 999_999])).collect()}
     assert got == {999_999}
 
 
@@ -121,127 +130,9 @@ def test_slim_and_branchy_novel_shapes_agree(spark):
     branchy = run(10**9)  # threshold never reached -> branchy shape
     slim = run(0)         # always slim shape
     # slim + checkpointed tested frame (one bloom evaluation) — the
-    # kernel/scheduler fpp_checkpoint_tested knob must not change rows
+    # kernel's fpp_checkpoint_tested setting must not change rows
     slim_ckpt = run(0, fpp_ckpt=True)
     expect = sorted(
         (h, f"surt{h}") for h in cand_rows if h not in set(seen_rows)
     )
     assert branchy == slim == slim_ckpt == expect
-
-
-def test_jvm_bloom_membership_exact(spark):
-    """JVM serving mode: membership via BloomFilterMightContain must stay
-    exact (false positives rescued by the anti-join) and flag all
-    inserted keys as maybe-seen."""
-    st = SeenState(spark, num_partitions=4, expected_total=40_000,
-                   use_bloom=True, jvm_bloom=True)
-    assert not st.broadcast_bloom and not st.is_sharded
-    st.add(_urls(spark, list(range(0, 100, 2))))
-    got = {r["url_hash"] for r in st.novel(_urls(spark, [2, 3, 50, 51, 777])).collect()}
-    assert got == {3, 51, 777}
-    # incremental adds keep working against the same driver bitset
-    st.add(_urls(spark, [3, 51]))
-    got = {r["url_hash"] for r in st.novel(_urls(spark, [3, 51, 778])).collect()}
-    assert got == {778}
-
-
-def test_jvm_bloom_blob_readable_by_jvm(spark):
-    """The driver-built bitset must be bit-compatible with the JVM's
-    BloomFilter.readFrom/mightContainLong (the expression path depends on
-    it) — checked element by element against the numpy twin."""
-    import numpy as np
-
-    from warchaeology_spark.frontier.seen import (
-        _jvm_bloom_serialize,
-        _jvm_test_bits,
-    )
-
-    st = SeenState(spark, num_partitions=4, expected_total=10_000,
-                   use_bloom=True, jvm_bloom=True)
-    keys = list(range(-500, 500, 3))
-    st.add(_urls(spark, keys))
-    blob = _jvm_bloom_serialize(st._jvm_words, st.jvm_k)
-    jvm = spark.sparkContext._jvm
-    jbf = jvm.org.apache.spark.util.sketch.BloomFilter.readFrom(
-        jvm.java.io.ByteArrayInputStream(blob)
-    )
-    probe = np.array(keys + list(range(10_000, 10_400)), dtype=np.int64)
-    py = _jvm_test_bits(st._jvm_words, probe, st.jvm_m_bits, st.jvm_k)
-    assert py[: len(keys)].all()  # every inserted key present
-    for v, expect in zip(probe.tolist(), py.tolist()):
-        assert jbf.mightContainLong(v) == expect
-
-
-def test_jvm_bloom_checkpoint_roundtrip(spark):
-    st = SeenState(spark, num_partitions=4, expected_total=40_000,
-                   use_bloom=True, jvm_bloom=True)
-    st.add(_urls(spark, list(range(30))))
-    snap_bloom = st.bloom.localCheckpoint(eager=True)
-    snap_seen = st.seen.localCheckpoint(eager=True)
-    assert snap_bloom.collect()[0]["pid"] == -1  # jvm-format marker row
-
-    st2 = SeenState(spark, num_partitions=4, expected_total=40_000,
-                    use_bloom=True, jvm_bloom=True)
-    st2.restore(snap_seen, snap_bloom)
-    got = {r["url_hash"] for r in st2.novel(_urls(spark, [5, 15, 777])).collect()}
-    assert got == {777}
-
-
-def test_jvm_large_delta_demotes_to_sharded(spark, monkeypatch):
-    from pyspark.sql import DataFrame
-
-    st = SeenState(spark, num_partitions=4, expected_total=40_000,
-                   use_bloom=True, jvm_bloom=True)
-    st.broadcast_max_delta = 50
-    st.add(_urls(spark, list(range(10))))
-    assert st.jvm_bloom and st._jvm_words is not None
-
-    def no_driver_rows(self, *a, **kw):
-        raise AssertionError("row data pulled through the driver on a large delta")
-
-    monkeypatch.setattr(DataFrame, "toPandas", no_driver_rows)
-    st.add(_urls(spark, list(range(1000, 1100))), n_rows=100)
-    assert not st.jvm_bloom and st.is_sharded  # demoted, one-way
-    monkeypatch.undo()
-
-    # pre-demotion AND post-demotion keys both effective after the rebuild
-    got = {r["url_hash"] for r in st.novel(_urls(spark, [3, 1005, 888_888])).collect()}
-    assert got == {888_888}
-
-
-def test_jvm_restore_from_foreign_bloom_rebuilds_from_seen(spark):
-    """Resuming a store written by a DIFFERENT bloom mode must rebuild the
-    JVM bitset from the exact seen table (bit layouts are incompatible; a
-    false negative would re-crawl a seen URL)."""
-    src = SeenState(spark, num_partitions=4, expected_total=40_000, use_bloom=True)
-    src.add(_urls(spark, list(range(40))))
-    foreign_bloom = src.bloom.localCheckpoint(eager=True)  # numpy-shard layout
-    seen_snap = src.seen.localCheckpoint(eager=True)
-
-    st = SeenState(spark, num_partitions=4, expected_total=40_000,
-                   use_bloom=True, jvm_bloom=True)
-    st.restore(seen_snap, foreign_bloom)
-    assert st._jvm_words is not None and st._jvm_words.any()
-    got = {r["url_hash"] for r in st.novel(_urls(spark, [7, 21, 999])).collect()}
-    assert got == {999}
-
-
-def test_numpy_modes_refuse_jvm_format_checkpoint(spark):
-    import pytest
-
-    src = SeenState(spark, num_partitions=4, expected_total=40_000,
-                    use_bloom=True, jvm_bloom=True)
-    src.add(_urls(spark, list(range(10))))
-    jvm_bloom_df = src.bloom.localCheckpoint(eager=True)
-
-    st = SeenState(spark, num_partitions=4, expected_total=40_000, use_bloom=True)
-    with pytest.raises(ValueError, match="jvm serving mode"):
-        st.restore(src.seen, jvm_bloom_df)
-
-    # the cogroup-SHARDED mode must refuse too — before the guard it
-    # silently adopted the pid=-1 row as its shard table, crashing novel()
-    # or (after an add()) re-scheduling previously-seen URLs (ADVICE r5)
-    sh = SeenState(spark, num_partitions=4, expected_total=40_000,
-                   use_bloom=True, broadcast_bloom=False)
-    with pytest.raises(ValueError, match="jvm serving mode"):
-        sh.restore(src.seen, jvm_bloom_df)

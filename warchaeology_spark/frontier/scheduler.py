@@ -62,10 +62,6 @@ class CrawlConfig:
     n_salts: int = 8
     use_bloom: bool = True
     broadcast_bloom: bool = True  # False -> cogroup-sharded bloom (seen.py)
-    # True -> JVM BloomFilterMightContain serving mode (seen.py jvm_bloom):
-    # membership stays whole-stage-codegen JVM, zero Python on the novel
-    # path; add() keeps the 8 B/URL delta pull. Overrides broadcast_bloom.
-    jvm_bloom: bool = False
     # override SeenState.broadcast_max_delta (rows per add() above which
     # broadcast mode self-demotes to cogroup-sharded); None = seen.py default
     broadcast_max_delta: int | None = None
@@ -81,73 +77,6 @@ class CrawlConfig:
     # manifest's next_round is the first uncommitted one). The final
     # (or early-terminating) round always commits.
     commit_every: int = 1
-    # Lazy (deferred) localCheckpoints for the round's carry-over state:
-    # pending and seen are checkpointed eager=False, so their
-    # materialization folds into the FIRST job of the next round
-    # (politeness / novel) instead of costing a dedicated job each —
-    # two fewer driver-side job round trips per round. Same lineage
-    # truncation, same results; False restores the r5 behavior.
-    lazy_state_checkpoints: bool = True
-    # Checkpoint the bloom-tested candidate frame inside novel() so the
-    # discovered lineage (post-shuffle winner canonicalization + bloom
-    # UDF) evaluates ONCE instead of twice (survivors broadcast build +
-    # final probe scan) — SeenState.fpp_checkpoint_tested. Costs one
-    # materialization of the round's candidates (bounded by per-round
-    # candidate volume, never |seen|, so the cache stays round-sized at
-    # any crawl scale). Measured on the 16M-URL kernel at 4x4-core
-    # executors: -24% pass time (39.4 -> 29.9 s best-of-3). On the FULL
-    # crawl the same knob measured +13% SLOWER (interleaved same-session
-    # A/B, BENCH/ab_fpp_frontier_r7.json) — here the candidate lineage
-    # restarts from the dedup shuffle's materialized map outputs (the
-    # expensive parse sits BEFORE that exchange), so re-evaluating
-    # `tested` re-reads shuffle files + re-runs the bloom probe, which
-    # is cheaper than writing a full-width checkpoint of every
-    # candidate. An upstream shuffle is already a materialization
-    # boundary; only exchange-free lineages (the kernel's) benefit from
-    # an explicit one. Hence default False for the scheduler.
-    fpp_checkpoint_tested: bool = False
-    # Materialize the round's deduped winners (`discovered`: surt,
-    # url_canon, url_hash, host, depth, src_doc_id — winner-sized and
-    # narrow) BEFORE the novel filter. novel()'s fpp-rescue shape reads
-    # its input twice (slim survivors anti-join + full-width probe);
-    # without a boundary here each consumer restarts from the dedup
-    # exchange's map outputs and re-runs the winner re-aggregation and
-    # the bloom UDF. Unlike fpp_checkpoint_tested (full-width, post-UDF,
-    # measured slower on the crawl), this boundary sits pre-UDF at the
-    # narrowest shared point of the lineage, so it replaces the repeated
-    # post-shuffle work with one winner-sized write. First observed as a
-    # side effect of profile_stages (the profiled mid10x pass, doing
-    # strictly MORE work, beat the unprofiled one 155 vs 213 s); default
-    # set by the interleaved A/B in BENCH/ab_ckpt_disc_r7.json.
-    ckpt_discovered: bool = True
-    # r8 (VERDICT r7 next #2 — cut per-round fixed cost F kernel-style):
-    # lazy localCheckpoints for the INTRA-round frames too (scheduled,
-    # discovered, gated). Each eager checkpoint is its own driver job +
-    # full barrier; with all three lazy, the round's first action — the
-    # merged stats collect — materializes the whole
-    # politeness→fetch→dedup→novel→gate lineage in ONE job, and every
-    # later consumer (seen add, pending union, fetch log, commit) reads
-    # the caches. Same lineage truncation, same sharing, same results;
-    # the per-round driver job count drops from ~4 to ~1 (+commit).
-    # Interleaved fresh-JVM A/B at the bench mid tier: see
-    # BENCH/ab_lazy_round_r8.json. profile_stages forces eager (per-stage
-    # wall-clock attribution needs real job boundaries). Env override:
-    # SPARK_GRAFT_FRONTIER_LAZY_ROUND=0 restores r7 behavior.
-    lazy_round_checkpoints: bool = field(
-        default_factory=lambda: __import__("os").environ.get(
-            "SPARK_GRAFT_FRONTIER_LAZY_ROUND", "1"
-        )
-        == "1"
-    )
-    # Opt-in per-STAGE attribution inside the fetch/gate phase (VERDICT r6
-    # next #5: mid10x fetch_gate grew 43 -> 71 -> 86 s/round; is the
-    # growth candidate volume or |seen|-superlinear?). When True, the
-    # round loop materializes `discovered` (extract + dedup shuffle +
-    # winner canonicalization) and `novel` (bloom test + exact rescue)
-    # separately, records each stage's wall-clock plus the intermediate
-    # row counts. Extra checkpoints + count jobs per round — profiling
-    # only, never the production path.
-    profile_stages: bool = False
 
 
 @dataclass
@@ -161,9 +90,12 @@ class CrawlResult:
     # metrics stays bit-comparable with the sequential oracle's.
     partition_metrics: list[dict] = field(default_factory=list)
     rounds_run: int = 0
-    # per-round wall-clock of each driver-side phase (politeness ckpt,
-    # fetch+gate ckpt, merged stats collect, seen add, state ckpts,
-    # commit) — the measurement behind the per-round fixed-cost F work
+    # per-round wall-clock of each driver-side CALL (politeness ckpt,
+    # extract+dedup ckpt, fetch+gate ckpt, merged stats collect, seen add,
+    # state ckpts, commit). The checkpoints are lazy, so a call's time is
+    # whatever jobs AQE happened to run inside it: these numbers do not
+    # attribute work to a phase. For per-layer attribution use
+    # ``perfbench/run.py --trace 1`` (job groups + event-log fold).
     timings: list[dict] = field(default_factory=list)
 
 
@@ -235,8 +167,6 @@ def run_crawl(
         expected_total=config.expected_total,
         use_bloom=config.use_bloom,
         broadcast_bloom=config.broadcast_bloom,
-        jvm_bloom=config.jvm_bloom,
-        fpp_checkpoint_tested=config.fpp_checkpoint_tested,
         **(
             {"broadcast_max_delta": config.broadcast_max_delta}
             if config.broadcast_max_delta is not None
@@ -275,19 +205,26 @@ def run_crawl(
 
     if store and config.resume and store.latest_version() is not None:
         m = store.meta()
-        start_round = m["next_round"]
-        metrics = list(m.get("metrics", []))
-        partition_metrics = list(m.get("partition_metrics", []))
-        pending = store.load("pending")
         # apply the committed seen-state mode BEFORE restore: a crawl that
         # auto-demoted to sharded must resume sharded (ADVICE r3 #4), and
         # bloom setter semantics depend on the mode. Pre-r4 manifests have
         # no seen_state entry -> keep the configured defaults.
         ss_meta = m.get("seen_state", {})
+        if ss_meta.get("jvm_bloom"):
+            # stores written by the retired JVM serving mode hold one
+            # BloomFilterImpl-layout row that the numpy double-hash shards
+            # cannot read; adopting it could re-schedule seen URLs
+            raise ValueError(
+                f"store root {config.store_root!r} was written by the "
+                "removed JVM bloom serving mode; its bloom cannot be "
+                "resumed — start a fresh crawl in an empty store root"
+            )
+        start_round = m["next_round"]
+        metrics = list(m.get("metrics", []))
+        partition_metrics = list(m.get("partition_metrics", []))
+        pending = store.load("pending")
         if not ss_meta.get("broadcast_bloom", seen_state.broadcast_bloom):
             seen_state.broadcast_bloom = False
-        if not ss_meta.get("jvm_bloom", seen_state.jvm_bloom):
-            seen_state.jvm_bloom = False  # demotions are one-way (jvm -> sharded)
         committed_rows = ss_meta.get("seen_rows_approx")
         if committed_rows is not None:
             seen_state.seen_rows_approx = int(committed_rows)
@@ -347,7 +284,7 @@ def run_crawl(
             append["fetch_log"] = fl
         # pending mutates non-monotonically -> full rewrite (bounded by
         # the live frontier; Iceberg swap: merge-on-read). bloom bitsets
-        # mutate in place -> full rewrite (3 GB at the 10^10 design
+        # mutate in place -> full rewrite (12 GB at the 10^10 design
         # point vs ~1 TB for seen — the seen/fetch_log deltas are the
         # write-amplification fix that matters).
         tables = {"pending": pending}
@@ -362,14 +299,13 @@ def run_crawl(
                 # seen-state mode must survive resume: a crawl that
                 # auto-demoted to cogroup-sharded must NOT resume into
                 # broadcast mode (restore would collect the full bitset
-                # set — ~3 GB at the 10^10 design point — to the driver
+                # set — ~12 GB at the 10^10 design point — to the driver
                 # and re-enter the mode the demotion guard escaped).
                 # The exact row count lets resume keep the right
                 # novel() join shape without an extra action.
                 # (ADVICE r3 #4.)
                 "seen_state": {
                     "broadcast_bloom": seen_state.broadcast_bloom,
-                    "jvm_bloom": seen_state.jvm_bloom,
                     "seen_rows_approx": seen_state.seen_rows_approx,
                 },
             },
@@ -395,10 +331,6 @@ def run_crawl(
             store.load("seen"),
             store.load("bloom") if reload_bloom else None,
             assume_large=False,
-            # in-loop lineage-truncation restore of bits this same crawl
-            # just wrote — the jvm-layout format probe (a driver job in
-            # sharded mode) is only needed on a true resume (ADVICE r6 low)
-            check_format=False,
         )
         # a flush with zero logged fetches (fresh crawl whose first round
         # schedules nothing) commits no fetch_log table
@@ -407,16 +339,20 @@ def run_crawl(
 
     import time as _time
 
-    eager_state = not config.lazy_state_checkpoints
-    # profile_stages needs real job boundaries for per-stage attribution
-    eager_round = config.profile_stages or not config.lazy_round_checkpoints
+    # Checkpoint placement (each one measured against its alternative by
+    # an interleaved fresh-JVM A/B): every round/state localCheckpoint is
+    # lazy, so it is materialized by the first job that reads it instead
+    # of costing a dedicated job (BENCH/ab_lazy_round_r8.json); the
+    # winner-sized `discovered` frame is checkpointed once per round
+    # because novel() reads it twice (BENCH/ab_ckpt_disc_r7.json: -25%);
+    # the sharded bloom's checkpoint stays eager.
     r = start_round
     while r < config.max_rounds:
         tr: dict = {"round": r}
         t0 = _time.monotonic()
         scheduled = politeness_topk(
             pending, politeness, config.default_budget, config.n_salts
-        ).localCheckpoint(eager=eager_round)
+        ).localCheckpoint(eager=False)
         tr["politeness_ckpt_sec"] = round(_time.monotonic() - t0, 3)
 
         fetch_log_r = scheduled.select(
@@ -467,20 +403,12 @@ def run_crawl(
             F.col("w.src_doc_id").alias("src_doc_id"),
         )
 
-        if config.profile_stages or config.ckpt_discovered:
-            t0 = _time.monotonic()
-            discovered = discovered.localCheckpoint(eager=eager_round)
-            tr["extract_dedup_sec"] = round(_time.monotonic() - t0, 3)
-        if config.profile_stages:
-            tr["discovered_rows"] = discovered.count()  # cached, one cheap job
-            t0 = _time.monotonic()
-            novel = seen_state.novel(discovered).localCheckpoint(eager=True)
-            tr["novel_filter_sec"] = round(_time.monotonic() - t0, 3)
-            tr["novel_rows"] = novel.count()
-        else:
-            novel = seen_state.novel(discovered)
         t0 = _time.monotonic()
-        gated = gate(novel).localCheckpoint(eager=eager_round)
+        discovered = discovered.localCheckpoint(eager=False)
+        tr["extract_dedup_sec"] = round(_time.monotonic() - t0, 3)
+        novel = seen_state.novel(discovered)
+        t0 = _time.monotonic()
+        gated = gate(novel).localCheckpoint(eager=False)
         tr["fetch_gate_ckpt_sec"] = round(_time.monotonic() - t0, 3)
 
         # ONE merged driver action for everything the round must learn
@@ -541,16 +469,16 @@ def run_crawl(
         seen_deltas.append(gated.select("url_hash", "surt", "url_canon"))
         allowed = gated.filter(~F.col("robots_denied")).select(*PENDING_COLS)
         tr["seen_add_sec"] = round(_time.monotonic() - t0, 3)
-        # carry-over state: lazily checkpointed by default — the lineage
-        # cut still happens, but materialization rides the next round's
-        # first job instead of costing a dedicated job here
+        # carry-over state: the lineage cut still happens, but
+        # materialization rides the next round's first job instead of
+        # costing a dedicated job here
         t0 = _time.monotonic()
-        pending = pending.unionByName(allowed).localCheckpoint(eager=eager_state)
-        seen_state.seen = seen_state.seen.localCheckpoint(eager=eager_state)
+        pending = pending.unionByName(allowed).localCheckpoint(eager=False)
+        seen_state.seen = seen_state.seen.localCheckpoint(eager=False)
         if seen_state.is_sharded:
             # sharded mode (configured, or auto-demoted on a large delta):
-            # truncate the cogroup lineage. Broadcast and jvm modes keep
-            # their bits on the driver — nothing to checkpoint here.
+            # truncate the cogroup lineage. Broadcast mode keeps its bits
+            # on the driver — nothing to checkpoint here.
             seen_state.bloom = seen_state.bloom.localCheckpoint(eager=True)
         tr["state_ckpt_sec"] = round(_time.monotonic() - t0, 3)
 

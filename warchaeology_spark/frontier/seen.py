@@ -19,10 +19,10 @@ driver-side bloom: ~12 GB at 1% fpp) cannot work; the Spark-native design:
   steady-state crawl where most discovered links are already seen, the
   bloom removes the dominant shuffle.
 
-Scale math (design point, documented for the 10^10 target): P=4096
-partitions x 3.0 GB/4096 ≈ 0.7 MB... sized as bits = 14.4 *
-(10^10/4096) ≈ 4.4 MB per partition bitset at 1% fpp, k=7 — each task
-holds exactly one bitset in memory; update is an OR per partition.
+Scale math (design point, documented for the 10^10 target; the sizing is
+``_bloom_params``): 1% fpp -> 9.59 bits/key, so P=4096 partitions of
+10^10/4096 keys each hold a 2.93 MB bitset with k=7 (11.98 GB in total) —
+each task holds exactly one bitset in memory; update is an OR per partition.
 """
 
 from __future__ import annotations
@@ -34,85 +34,6 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def _mm3_hash_long(v: np.ndarray, seed) -> np.ndarray:
-    """Vectorized Murmur3_x86_32.hashLong — Spark's sketch hash (public
-    org.apache.spark.unsafe.hash.Murmur3_x86_32 semantics: the long is
-    mixed as two 32-bit lanes, low first). Written from the murmur3 spec
-    so driver-set bits are readable by the JVM's BloomFilterImpl.
-    ``seed`` may be a scalar or a per-element uint32 array."""
-    C1, C2 = np.uint32(0xCC9E2D51), np.uint32(0x1B873593)
-
-    def rotl(x, r):
-        return (x << np.uint32(r)) | (x >> np.uint32(32 - r))
-
-    def mix_k1(k1):
-        return rotl(k1 * C1, 15) * C2
-
-    def mix_h1(h1, k1):
-        return rotl(h1 ^ k1, 13) * np.uint32(5) + np.uint32(0xE6546B64)
-
-    u = v.astype(np.uint64)
-    low = (u & np.uint64(0xFFFFFFFF)).astype(np.uint32)
-    high = (u >> np.uint64(32)).astype(np.uint32)
-    h1 = np.broadcast_to(np.asarray(seed, dtype=np.uint32), low.shape)
-    h1 = mix_h1(h1, mix_k1(low))
-    h1 = mix_h1(h1, mix_k1(high))
-    h1 = h1 ^ np.uint32(8)  # fmix(h1, 8): 8 input bytes
-    h1 ^= h1 >> np.uint32(16)
-    h1 = h1 * np.uint32(0x85EBCA6B)
-    h1 ^= h1 >> np.uint32(13)
-    h1 = h1 * np.uint32(0xC2B2AE35)
-    h1 ^= h1 >> np.uint32(16)
-    return h1
-
-
-def _jvm_positions(hashes: np.ndarray, m_bits: int, k: int) -> np.ndarray:
-    """(len, k) bit positions matching BloomFilterImpl.putLong/
-    mightContainLong: h1 + i*h2 (i in 1..k) in int32, negative flipped
-    with ~, then modulo the bit size."""
-    h1 = _mm3_hash_long(hashes, 0)
-    h2 = _mm3_hash_long(hashes, h1)
-    i = np.arange(1, k + 1, dtype=np.uint32)
-    combined = (h1[:, None] + i[None, :] * h2[:, None]).view(np.int32)
-    combined = np.where(combined < 0, ~combined, combined)
-    return combined.astype(np.int64) % np.int64(m_bits)
-
-
-def _jvm_set_bits(words: np.ndarray, hashes: np.ndarray, m_bits: int, k: int) -> None:
-    """OR the key bits into a uint64 word array laid out like the JVM
-    BitArray (bit j of word w = index w*64 + j)."""
-    pos = _jvm_positions(hashes, m_bits, k).ravel()
-    np.bitwise_or.at(
-        words, pos >> 6, np.uint64(1) << (pos & 63).astype(np.uint64)
-    )
-
-
-def _jvm_test_bits(words: np.ndarray, hashes: np.ndarray, m_bits: int, k: int) -> np.ndarray:
-    """Pure-Python twin of the JVM mightContainLong (agreement tests)."""
-    pos = _jvm_positions(hashes, m_bits, k)
-    bits = (words[pos >> 6] >> (pos & 63).astype(np.uint64)) & np.uint64(1)
-    return (bits != 0).all(axis=1)
-
-
-def _jvm_bloom_serialize(words: np.ndarray, k: int) -> bytes:
-    """Spark BloomFilterImpl V1 stream: version int, numHashFunctions int,
-    BitArray (word count int + big-endian longs). Readable by
-    BloomFilter.readFrom / the BloomFilterMightContain expression."""
-    import struct
-
-    return struct.pack(">iii", 1, k, len(words)) + words.astype(">u8").tobytes()
-
-
-def _jvm_bloom_deserialize(blob: bytes) -> tuple[np.ndarray, int]:
-    import struct
-
-    version, k, n_words = struct.unpack(">iii", blob[:12])
-    if version != 1:
-        raise ValueError(f"unsupported bloom stream version {version}")
-    words = np.frombuffer(blob[12:12 + 8 * n_words], dtype=">u8").astype(np.uint64)
-    return words, k
 
 
 def _bloom_params(expected_per_partition: int, fpp: float) -> tuple[int, int]:
@@ -168,23 +89,6 @@ class SeenState:
     # For blooms too large to broadcast at all, flip to False for the
     # cogroup-sharded path where each task sees only its shard.
     broadcast_bloom: bool = True
-    # JVM serving mode (VERDICT r4 next #1): add() keeps the cheap
-    # 8 B/URL delta pull, but the driver maintains ONE bitset in Spark's
-    # own BloomFilterImpl V1 layout (vectorized numpy Murmur3), so
-    # novel()'s membership test is a codegen'd JVM BloomFilterMightContain
-    # expression — ZERO Python on the membership path (no Arrow batch
-    # round-trips, no pandas UDF fixed cost per batch). The serialized
-    # filter rides the stage's task closure as a binary literal —
-    # deserialized per TASK, which is why the mode measured 35-44% SLOWER
-    # than the delta-broadcast numpy path at 16M URLs (A/B'd both widths,
-    # BENCH/ab_novel_r5.json + BENCH/BASELINE.md round-5 note): there is
-    # no public seam to ship the literal as a real broadcast. Kept as an
-    # opt-in serving mode (parity-tested; checkpoint round-trips), not
-    # the default. Mutually exclusive with
-    # broadcast_bloom; demotes to the cogroup-sharded mode on an oversized
-    # delta by REBUILDING the sharded bitsets from the exact seen table
-    # (bloom bits are not translatable between hash layouts).
-    jvm_bloom: bool = False
     # auto-demotion guard (VERDICT r2 #2): broadcast-mode add() pulls the
     # round's url_hash delta through the driver (8 B/URL) — fine at
     # 10^5/round, a ~800 MB single-threaded bottleneck at 10^8. When a
@@ -196,24 +100,19 @@ class SeenState:
     # anti-join (AQE broadcasts it whole); above it the shuffle-slim
     # key-projection + broadcast-rescue shape wins (2x at 8M+ keys)
     slim_join_min_rows: int = 2_000_000
-    # slim-shape lever (A/B'd in tools/ab_novel.py): localCheckpoint the
-    # bloom-tested frame before its two consumers (survivor anti-join +
-    # final probe) so the bloom UDF and the candidate lineage evaluate
-    # ONCE instead of twice, at the price of materializing `tested`.
+    # slim-shape lever: localCheckpoint the bloom-tested frame before its
+    # two consumers (survivor anti-join + final probe) so the bloom UDF and
+    # the candidate lineage evaluate ONCE instead of twice, at the price of
+    # materializing `tested`. On for bench.py's exchange-free kernel
+    # (BENCH/ab_fpp_ckpt_r7.json), off for the crawl, whose candidates
+    # restart from the dedup shuffle's map outputs
+    # (BENCH/ab_fpp_frontier_r7.json: +13% slower there).
     fpp_checkpoint_tested: bool = False
 
     def __post_init__(self):
         self.m_bits, self.k = _bloom_params(
             self.expected_total // self.num_partitions, self.fpp
         )
-        if self.jvm_bloom:
-            self.broadcast_bloom = False  # modes are mutually exclusive
-        # jvm mode: one UNSHARDED bitset sized for the whole crawl (the
-        # sharded partition scheme would need one literal per shard in the
-        # membership expression). Same applicability envelope as the
-        # broadcast mode — the 10^10 design point stays cogroup-sharded.
-        self.jvm_m_bits, self.jvm_k = _bloom_params(self.expected_total, self.fpp)
-        self._jvm_words: np.ndarray | None = None
         self.seen: DataFrame = self.spark.createDataFrame(
             [], "url_hash long, surt string, url_canon string"
         )
@@ -241,21 +140,7 @@ class SeenState:
 
         Sharded mode: the live distributed table. Broadcast mode: built
         from the driver shards on demand (checkpoint/inspection only — the
-        hot path never materializes it). JVM mode: one pid=-1 row holding
-        the serialized BloomFilterImpl stream."""
-        if self.jvm_bloom:
-            words = (
-                self._jvm_words
-                if self._jvm_words is not None
-                else np.zeros(self.jvm_m_bits // 64, dtype=np.uint64)
-            )
-            pdf = pd.DataFrame(
-                {
-                    "pid": pd.Series([-1], dtype="int32"),
-                    "bitset": [_jvm_bloom_serialize(words, self.jvm_k)],
-                }
-            )
-            return self.spark.createDataFrame(pdf)
+        hot path never materializes it)."""
         if not self.broadcast_bloom:
             return self._bloom_df
         zero = bytes(self.m_bits // 8)
@@ -272,41 +157,9 @@ class SeenState:
 
     @bloom.setter
     def bloom(self, df: DataFrame) -> None:
-        self._set_bloom(df, check_format=True)
-
-    def _set_bloom(self, df: DataFrame, check_format: bool = True) -> None:
-        """``check_format=False`` skips the sharded-mode jvm-layout probe
-        (a filter+limit+count driver job) — safe ONLY when the caller knows
-        the frame's provenance, i.e. the scheduler's in-loop lineage-
-        truncation restore of bits this same crawl just wrote (ADVICE r6
-        low: the probe cost one extra driver job per commit). True resumes
-        and direct property assignment always probe."""
-        if self.jvm_bloom:
-            rows = df.filter(F.col("pid") == -1).collect()
-            if rows:
-                words, k = _jvm_bloom_deserialize(bytes(rows[0]["bitset"]))
-                self._jvm_words = words.copy()
-                self.jvm_k, self.jvm_m_bits = k, len(words) * 64
-            else:
-                # store written by a different bloom mode: bits are not
-                # format-compatible — restore() rebuilds from the exact
-                # seen table instead (bloom must never miss a seen key)
-                self._jvm_words = None
-        elif self.broadcast_bloom:
+        if self.broadcast_bloom:
             self._seed_shards_from(df)
         else:
-            # same guard as _seed_shards_from: a pid=-1 row is a jvm-mode
-            # (BloomFilterImpl) checkpoint whose bits the numpy double-hash
-            # shards can't read — silently adopting it would make novel()
-            # crash (no real-pid rows) or, worse after an add(), re-schedule
-            # previously-seen URLs (ADVICE r5 medium).
-            if check_format and df.filter(F.col("pid") < 0).limit(1).count() > 0:
-                raise ValueError(
-                    "bloom checkpoint was written in jvm serving mode "
-                    "(BloomFilterImpl layout); its bits are not readable "
-                    "by the numpy double-hash modes — resume with "
-                    "jvm_bloom=True (or use_bloom=False)"
-                )
             self._bloom_df = df
 
     def _seed_shards_from(self, df: DataFrame) -> None:
@@ -314,13 +167,6 @@ class SeenState:
         one full collect at resume, never per round)."""
         self._shards = {}
         for r in df.collect():
-            if int(r["pid"]) < 0:
-                raise ValueError(
-                    "bloom checkpoint was written in jvm serving mode "
-                    "(BloomFilterImpl layout); its bits are not readable "
-                    "by the numpy double-hash modes — resume with "
-                    "jvm_bloom=True (or use_bloom=False)"
-                )
             bits = np.frombuffer(bytes(r["bitset"]), dtype=np.uint8).copy()
             if bits.any():
                 self._shards[int(r["pid"])] = bits
@@ -333,9 +179,9 @@ class SeenState:
     @property
     def is_sharded(self) -> bool:
         """True when the bloom lives cluster-side as a (pid, bitset) table
-        (configured, or arrived at by auto-demotion from either driver
+        (configured, or arrived at by auto-demotion from the broadcast
         mode) — the caller must then checkpoint ``bloom`` per round."""
-        return self.use_bloom and not self.broadcast_bloom and not self.jvm_bloom
+        return self.use_bloom and not self.broadcast_bloom
 
     def _pid(self, col):
         return F.pmod(col, F.lit(self.num_partitions)).cast("int")
@@ -351,36 +197,6 @@ class SeenState:
         self._bc_chain = []
         self._shards = {}
         self._dirty = set()
-
-    def _switch_jvm_to_sharded(self) -> None:
-        """Demote jvm mode to the cogroup-sharded mode. Bloom bits cannot
-        be translated between hash layouts (Murmur3/BloomFilterImpl vs the
-        sharded double-hash scheme), so the sharded bitsets are REBUILT
-        from the exact seen table — one distributed pass, once per crawl
-        at most (demotion is one-way), and false negatives are impossible
-        because ``self.seen`` is the source of truth."""
-        self.jvm_bloom = False
-        self._jvm_words = None
-        m_bits, k = self.m_bits, self.k
-
-        def or_partition(key, bloom_pdf, new_pdf):
-            if len(bloom_pdf):
-                bits = np.frombuffer(bloom_pdf["bitset"].iloc[0], dtype=np.uint8).copy()
-            else:
-                bits = np.zeros(m_bits // 8, dtype=np.uint8)
-            if len(new_pdf):
-                _set_bits(bits, new_pdf["url_hash"].to_numpy(), m_bits, k)
-            return pd.DataFrame({"pid": [key[0]], "bitset": [bits.tobytes()]})
-
-        all_hashed = self.seen.select(
-            self._pid(F.col("url_hash")).alias("pid"), "url_hash"
-        )
-        self._bloom_df = (
-            self._bloom_df.groupBy("pid")
-            .cogroup(all_hashed.groupBy("pid"))
-            .applyInPandas(or_partition, "pid int, bitset binary")
-            .localCheckpoint(eager=True)
-        )
 
     # -- api ----------------------------------------------------------------
     def add(self, urls: DataFrame, n_rows: int | None = None) -> None:
@@ -403,23 +219,6 @@ class SeenState:
         if not self.use_bloom:
             return
         m_bits, k = self.m_bits, self.k
-        if self.jvm_bloom:
-            if n_rows is None:
-                n_rows = rows.count()
-                self.seen_rows_approx += n_rows
-            if n_rows > self.broadcast_max_delta:
-                # oversized delta: rebuild sharded bitsets from the exact
-                # seen table (which already includes this delta — union
-                # above) and stay sharded for the rest of the crawl
-                self._switch_jvm_to_sharded()
-                return
-            hv = rows.select("url_hash").toPandas()["url_hash"].to_numpy()
-            if not len(hv):
-                return
-            if self._jvm_words is None:
-                self._jvm_words = np.zeros(self.jvm_m_bits // 64, dtype=np.uint64)
-            _jvm_set_bits(self._jvm_words, hv, self.jvm_m_bits, self.jvm_k)
-            return
         if self.broadcast_bloom:
             if n_rows is None:
                 n_rows = rows.count()
@@ -469,12 +268,11 @@ class SeenState:
         CALL (broadcast chain is snapshotted here; the exact table is the
         lazily-captured ``self.seen`` plan). Materialize the result before
         the next ``add()`` — the scheduler's round loop localCheckpoints
-        eagerly between the two, which pins the snapshot.
+        the gated result and runs its stats action on it between the two,
+        which pins the snapshot.
         """
         if not self.use_bloom:
             return cands.join(self.seen.select("surt"), "surt", "left_anti")
-        if self.jvm_bloom:
-            return self._novel_jvm(cands)
         if self.broadcast_bloom:
             return self._novel_broadcast(cands)
 
@@ -592,40 +390,6 @@ class SeenState:
         tested = cands.withColumn("maybe_seen", bloom_maybe(F.col("url_hash")))
         return self._fpp_filter(tested).drop("maybe_seen")
 
-    def _might_contain_col(self, blob: bytes, col_name: str):
-        """A Column evaluating Spark's BloomFilterMightContain(lit(blob),
-        col) — the JVM expression behind SQL runtime row-group filtering
-        (codegen'd, whole-stage). Not in the SQL function registry, so the
-        expression tree is built directly; the serialized filter literal
-        ships with the stage's task binary (one copy per executor)."""
-        from pyspark.sql import Column
-
-        jvm = self.spark.sparkContext._jvm
-        ce = jvm.org.apache.spark.sql.catalyst.expressions
-        lit = ce.Literal.create(
-            blob, jvm.org.apache.spark.sql.types.DataTypes.BinaryType
-        )
-        attr = jvm.org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute.quoted(
-            col_name
-        )
-        expr = ce.BloomFilterMightContain(lit, attr)
-        return Column(jvm.org.apache.spark.sql.classic.ExpressionUtils.column(expr))
-
-    def _novel_jvm(self, cands: DataFrame) -> DataFrame:
-        """JVM-bloom membership: the whole novel path stays inside
-        whole-stage codegen — no Arrow transfer, no Python worker, no
-        per-batch fixed cost. The literal snapshot also pins the seen-set
-        AS OF THIS CALL for free (bytes are copied at expression build)."""
-        if self._jvm_words is None:  # nothing inserted yet
-            tested = cands.withColumn("maybe_seen", F.lit(False))
-        else:
-            blob = _jvm_bloom_serialize(self._jvm_words, self.jvm_k)
-            self.last_broadcast_bytes = len(blob)
-            tested = cands.withColumn(
-                "maybe_seen", self._might_contain_col(blob, "url_hash")
-            )
-        return self._fpp_filter(tested).drop("maybe_seen")
-
     def checkpoint_to(self, write_fn) -> None:
         """Materialize state via the caller-provided writer (checkpoint.py)."""
         write_fn("seen", self.seen)
@@ -633,11 +397,7 @@ class SeenState:
             write_fn("bloom", self.bloom)
 
     def restore(
-        self,
-        seen: DataFrame,
-        bloom: DataFrame | None,
-        assume_large: bool = True,
-        check_format: bool = True,
+        self, seen: DataFrame, bloom: DataFrame | None, assume_large: bool = True
     ) -> None:
         """``assume_large``: on a true resume the state size is unknown
         without an action, so assume large and let novel() pick the
@@ -650,14 +410,4 @@ class SeenState:
         if assume_large:
             self.seen_rows_approx = max(self.seen_rows_approx, self.slim_join_min_rows)
         if bloom is not None:
-            # broadcast mode: seeds driver shards (setter path)
-            self._set_bloom(bloom, check_format=check_format)
-            if self.jvm_bloom and self._jvm_words is None:
-                # checkpoint came from a different bloom mode: rebuild the
-                # JVM-layout bitset from the exact seen table (one 8 B/row
-                # hash pull, same order as the broadcast-mode full-shard
-                # restore; false negatives impossible — seen is the truth)
-                hv = self.seen.select("url_hash").toPandas()["url_hash"].to_numpy()
-                self._jvm_words = np.zeros(self.jvm_m_bits // 64, dtype=np.uint64)
-                if len(hv):
-                    _jvm_set_bits(self._jvm_words, hv, self.jvm_m_bits, self.jvm_k)
+            self.bloom = bloom  # broadcast mode: seeds driver shards

@@ -98,14 +98,15 @@ def block_neardup_candidates(
     HALF_UP, the rounding authority — makes the final cut; no pair that
     could round up to the threshold is dropped here).
 
-    Bit-for-bit equivalence with the JVM fold (dot()/dot_flat, norm()):
-    the dot and squared-norm accumulators advance one DIMENSION at a time
-    (``acc += col_d_outer``), vectorized across pairs — so each pair's
-    sum is the identical left-association ((0.0 + x0*y0) + x1*y1) + ...
-    over identical float32→double-exact products, and the division by
-    (norm_a * norm_b) uses the same operand order. Every IEEE operation
-    matches the JVM expression, so cos_raw is the same double (pinned by
-    tests/test_similarity equivalence tests).
+    Equivalence with the JVM fold (dot()/dot_flat, norm()) is NOT
+    bit-for-bit: the squared norms still accumulate one dimension at a
+    time in the fold's order, but the dot products come from a BLAS
+    matmul whose summation order differs from the left fold, so cos_raw
+    can differ from the JVM double by a few ulp. Equality holds only
+    after the caller's ``round(cos_raw, 4)``, and only empirically (no
+    pair on the committed SFs sits within those ulp of a 4-dp rounding
+    midpoint or of the threshold). ``SPARK_GRAFT_EMB_PAIRS=flat`` is the
+    fold-order-exact fallback.
 
     Scale shape: one shuffle on block_col; per-block work is the
     inherently-quadratic pair set evaluated as 64 vectorized rank-1

@@ -1231,11 +1231,13 @@ def embedding_neardup_pairs(spark, sf):
     # r8 optimization (guide §3.1/§4.1): the pair set is quadratic within
     # each of the ~10 labels, so the per-pair cosine dominates — the old
     # interpreted-HOF cosine (3 lambda folds over the full vector per
-    # pair) cost 821 s at sf1.0. Now: per-row norms computed once before
-    # the join, flat codegen dot per pair (bit-identical fold order, see
-    # similarity.dot_flat), and a broadcast hash join on label with the
-    # streamed side round-robin repartitioned so the quadratic compute
-    # spreads over every core instead of 10 join keys.
+    # pair) cost 821 s at sf1.0. The default path is now the vectorized
+    # per-label BLAS kernel below; the SPARK_GRAFT_EMB_PAIRS=flat fallback
+    # keeps per-row norms computed once before the join, a flat codegen
+    # dot per pair (bit-identical fold order, see similarity.dot_flat),
+    # and a broadcast hash join on label with the streamed side
+    # round-robin repartitioned so the quadratic compute spreads over
+    # every core instead of 10 join keys.
     import os as _os
 
     from warchaeology_spark.operators.similarity import (
@@ -1247,7 +1249,8 @@ def embedding_neardup_pairs(spark, sf):
 
     emb = T(spark, sf, "embeddings")
     if _os.environ.get("SPARK_GRAFT_EMB_PAIRS", "gemm") == "gemm":
-        # vectorized per-label all-pairs (bit-identical fold order — see
+        # vectorized per-label all-pairs (BLAS summation order, so equal
+        # to the JVM fold only after round(.,4), empirically — see
         # block_neardup_candidates); JVM keeps the round+threshold
         cand = block_neardup_candidates(emb, 0.2)
         return (
