@@ -209,8 +209,8 @@ def run_kernel(spark, n_urls: int) -> dict:
 
     # seen set: half the key space pre-seen (steady-state crawl shape).
     # SPARK_GRAFT_KERNEL_BLOOM picks the serving mode: broadcast (default,
-    # delta-broadcast numpy shards + pandas-UDF test), sharded (cogroup),
-    # off (exact anti-join only).
+    # one broadcast of the numpy shards + pandas-UDF test), sharded
+    # (cogroup), off (exact anti-join only).
     bloom_mode = os.environ.get("SPARK_GRAFT_KERNEL_BLOOM", "broadcast")
     bloom_modes = ("broadcast", "sharded", "off")
     if bloom_mode not in bloom_modes:
@@ -223,19 +223,17 @@ def run_kernel(spark, n_urls: int) -> dict:
         num_partitions=cpus,
         expected_total=n_urls,
         use_bloom=bloom_mode != "off",
-        broadcast_bloom=bloom_mode == "broadcast",
-        broadcast_max_delta=n_urls,  # the pre-seen half is one big delta
+        # broadcast: the driver budget admits the pre-seen half (one big
+        # delta); sharded: a zero budget makes the state start sharded
+        broadcast_max_delta=0 if bloom_mode == "sharded" else n_urls,
         # Evaluate the bloom-tested frame once (cached) instead of twice
-        # (survivors build + probe scan) — DEFAULT ON since the r7 A/B on
-        # the bench instrument, same session back-to-back legs:
+        # (survivors build + probe scan) — r7 A/B on the bench instrument,
+        # same session back-to-back legs:
         #   1x4-core executors: 123.7 -> 107.1 s best-of-3 (-13%)
         #   4x4-core executors: 39.4 -> 29.9 s best-of-3 (-24%, profiler)
         # The cache is one round's candidates (never |seen|), so the
-        # materialization stays round-sized at any crawl scale. Revert
-        # with SPARK_GRAFT_KERNEL_FPP_CKPT=0.
-        fpp_checkpoint_tested=os.environ.get(
-            "SPARK_GRAFT_KERNEL_FPP_CKPT", "1"
-        ) == "1",
+        # materialization stays round-sized at any crawl scale.
+        fpp_checkpoint_tested=True,
     )
     # NOTE (measured negative result, round 3): caching seen
     # pre-partitioned + pre-sorted on the anti-join keys (repartition +
@@ -258,7 +256,7 @@ def run_kernel(spark, n_urls: int) -> dict:
     # re-pin to the checkpointed table to truncate the union lineage.
     tb0 = time.monotonic()
     seen_state.add(pre)
-    if not seen_state.broadcast_bloom:
+    if seen_state.is_sharded:
         seen_state.bloom = seen_state.bloom.localCheckpoint(eager=True)
     bloom_build_sec = time.monotonic() - tb0
     seen_state.seen = pre
@@ -285,14 +283,11 @@ def run_kernel(spark, n_urls: int) -> dict:
         # at 4x4-core executors, 16M URLs: 37.8 -> 33.9 s (-10%), same
         # scheduled count. Lineage is truncated either way, so the
         # multi-consumer reuse the eager NOTE above describes still holds
-        # (first evaluation materializes the cache). Revert with
-        # SPARK_GRAFT_KERNEL_LAZY_CANON=0.
+        # (first evaluation materializes the cache).
         canon_step = (
             in_urls.select(canonicalize_url(F.col("raw_url")).alias("url_canon"))
             .filter(F.col("url_canon").isNotNull())
-            .localCheckpoint(
-                eager=os.environ.get("SPARK_GRAFT_KERNEL_LAZY_CANON", "1") == "0"
-            )
+            .localCheckpoint(eager=False)
         )
         d = parts_from_canon(F.col("url_canon"))
         cand = canon_step.select(

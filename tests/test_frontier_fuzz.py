@@ -1,8 +1,9 @@
 """Property-based frontier parity (VERDICT r7 next #3): hypothesis-drawn
 crawl instances — random link graphs, robots prefix rules, politeness
-budgets and mangled seed orders — asserting run_crawl == the sequential
-oracle (frontier/oracle.py) on every draw, plus crawl-contract
-invariants. Pattern follows tests/test_warc_fuzz.py.
+budgets and mangled seed orders — each run on a drawn seen-set path
+(broadcast bloom, cogroup-sharded bloom, or no bloom), asserting
+run_crawl == the sequential oracle (frontier/oracle.py) on every draw,
+plus crawl-contract invariants. Pattern follows tests/test_warc_fuzz.py.
 
 Properties asserted per drawn instance:
   1. fetch-log parity: tuple-for-tuple (round, seq, url_canon, surt,
@@ -19,13 +20,17 @@ Properties asserted per drawn instance:
 from __future__ import annotations
 
 import re
+from functools import partial
+from unittest import mock
 
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
+from warchaeology_spark.frontier import scheduler
 from warchaeology_spark.frontier.oracle import simulate_crawl
 from warchaeology_spark.frontier.scheduler import CrawlConfig, run_crawl
+from warchaeology_spark.frontier.seen import SeenState
 
 DOCS_SCHEMA = (
     "doc_id string, url string, "
@@ -117,13 +122,16 @@ def fuzz_spark(spark):
     return spark
 
 
-@given(inst=crawl_instance())
+@given(
+    inst=crawl_instance(),
+    seen_path=st.sampled_from(["broadcast", "sharded", "off"]),
+)
 @settings(
     max_examples=6,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
-def test_fuzzed_crawl_matches_sequential_oracle(fuzz_spark, inst):
+def test_fuzzed_crawl_matches_sequential_oracle(fuzz_spark, inst, seen_path):
     spark = fuzz_spark
     docs, seeds, robots, politeness = inst
     docs_df = spark.createDataFrame(docs, DOCS_SCHEMA)
@@ -131,11 +139,17 @@ def test_fuzzed_crawl_matches_sequential_oracle(fuzz_spark, inst):
     robots_df = spark.createDataFrame(robots, ROBOTS_SCHEMA)
     pol_df = spark.createDataFrame(politeness, POL_SCHEMA)
 
-    res = run_crawl(
-        spark, docs_df, seeds_df, robots_df, pol_df,
-        CrawlConfig(max_rounds=3, num_partitions=2, n_salts=2,
-                    expected_total=4096),
-    )
+    # the serving mode is derived from the bloom size; a zero driver
+    # budget makes the state start cogroup-sharded
+    seen_cls = SeenState
+    if seen_path == "sharded":
+        seen_cls = partial(SeenState, broadcast_max_delta=0)
+    with mock.patch.object(scheduler, "SeenState", seen_cls):
+        res = run_crawl(
+            spark, docs_df, seeds_df, robots_df, pol_df,
+            CrawlConfig(max_rounds=3, num_partitions=2, n_salts=2,
+                        expected_total=4096, use_bloom=seen_path != "off"),
+        )
     oracle = simulate_crawl(docs, seeds, robots, politeness, max_rounds=3)
 
     engine_log = [

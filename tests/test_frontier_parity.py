@@ -31,6 +31,21 @@ def oracle_result(spark, fixture_dir):
     )
 
 
+def _route_seen_state(monkeypatch, make):
+    """Build run_crawl's SeenState through ``make`` (same arguments);
+    returns the list of states built."""
+    from warchaeology_spark.frontier import scheduler
+
+    built = []
+
+    def factory(*a, **kw):
+        built.append(make(*a, **kw))
+        return built[-1]
+
+    monkeypatch.setattr(scheduler, "SeenState", factory)
+    return built
+
+
 def _fetch_tuples(fetch_log_df):
     return [
         (r["round"], r["seq"], r["url_canon"], r["surt"], r["url_hash"],
@@ -82,14 +97,21 @@ def test_bloom_off_equivalence(spark, fixture_dir, oracle_result):
     assert _fetch_tuples(res.fetch_log) == _oracle_tuples(oracle_result)
 
 
-def test_bloom_sharded_equivalence(spark, fixture_dir, oracle_result):
-    # cogroup-sharded bloom path (broadcast off) must match too
+def test_bloom_sharded_equivalence(spark, fixture_dir, oracle_result, monkeypatch):
+    # cogroup-sharded bloom path must match too: a zero driver budget
+    # makes the state start sharded (the mode is derived, not configured)
+    from functools import partial
+
+    from warchaeology_spark.frontier.seen import SeenState
+
+    built = _route_seen_state(monkeypatch, partial(SeenState, broadcast_max_delta=0))
     docs, seeds, robots, pol = _load_inputs(spark, fixture_dir)
     res = run_crawl(
         spark, docs, seeds, robots, pol,
-        CrawlConfig(max_rounds=3, use_bloom=True, broadcast_bloom=False,
-                    num_partitions=4, expected_total=20_000),
+        CrawlConfig(max_rounds=3, use_bloom=True, num_partitions=4,
+                    expected_total=20_000),
     )
+    assert built[0].is_sharded
     oracle3 = [t for t in _oracle_tuples(oracle_result) if t[0] < 3]
     assert _fetch_tuples(res.fetch_log) == oracle3
 
@@ -122,31 +144,14 @@ def test_checkpoint_resume(spark, fixture_dir, oracle_result, tmp_path):
     assert engine_seen == set(oracle_result.seen)
 
 
-def test_deferred_commit_every_k_rounds(spark, fixture_dir, oracle_result, tmp_path):
-    """commit_every=2 defers snapshot commits: one commit appends TWO
-    rounds' seen/fetch deltas, and resume replays from the last committed
-    round exactly (VERDICT r5 next #3 — per-round fixed cost)."""
-    docs, seeds, robots, pol = _load_inputs(spark, fixture_dir)
-    root = str(tmp_path / "snap_k2")
-    run_crawl(spark, docs, seeds, robots, pol,
-              CrawlConfig(max_rounds=3, store_root=root, commit_every=2))
-    resumed = run_crawl(
-        spark, docs, seeds, robots, pol,
-        CrawlConfig(max_rounds=5, store_root=root, resume=True,
-                    commit_every=2),
-    )
-    assert _fetch_tuples(resumed.fetch_log) == _oracle_tuples(oracle_result)
-    assert {r["surt"] for r in resumed.seen.collect()} == set(oracle_result.seen)
-
-
 def test_kill_with_uncommitted_deferred_rounds_resumes_exactly(
     spark, fixture_dir, oracle_result, tmp_path, monkeypatch
 ):
-    """The deferred-commit durability contract: a kill loses at most k-1
-    uncommitted rounds, and resume REPLAYS them exactly. Simulated by
-    dropping every snapshot commit after the first on the floor (the
+    """The commit durability contract: a kill loses the rounds whose
+    commits never reached disk, and resume REPLAYS them exactly. Simulated
+    by dropping every snapshot commit after the first on the floor (the
     crash happens before later commits reach disk), then resuming: the
-    store holds only rounds 0-1, so rounds 2+ re-run — and the replayed
+    store holds only round 0, so rounds 1+ re-run — and the replayed
     crawl must still match the sequential oracle row-for-row."""
     from warchaeology_spark.frontier import checkpoint as cp
 
@@ -163,17 +168,16 @@ def test_kill_with_uncommitted_deferred_rounds_resumes_exactly(
 
     monkeypatch.setattr(cp.SnapshotStore, "commit", crashy_commit)
     run_crawl(spark, docs, seeds, robots, pol,
-              CrawlConfig(max_rounds=4, store_root=root, commit_every=2))
+              CrawlConfig(max_rounds=4, store_root=root))
     monkeypatch.setattr(cp.SnapshotStore, "commit", real_commit)
     assert n_commits["n"] > 1  # the crawl DID attempt later commits
 
     resumed = run_crawl(
         spark, docs, seeds, robots, pol,
-        CrawlConfig(max_rounds=5, store_root=root, resume=True,
-                    commit_every=2),
+        CrawlConfig(max_rounds=5, store_root=root, resume=True),
     )
-    # the store's manifest stops at round 2 -> rounds 2-4 replay
-    assert resumed.rounds_run == 3
+    # the store's manifest stops at round 1 -> rounds 1-4 replay
+    assert resumed.rounds_run == 4
     assert _fetch_tuples(resumed.fetch_log) == _oracle_tuples(oracle_result)
     assert {r["surt"] for r in resumed.seen.collect()} == set(oracle_result.seen)
 
@@ -265,23 +269,33 @@ def test_torn_commit_tmp_manifest_is_harmless(spark, fixture_dir, oracle_result,
     assert _fetch_tuples(resumed.fetch_log) == _oracle_tuples(oracle_result)
 
 
-def test_auto_demotion_mid_crawl_parity(spark, fixture_dir, oracle_result, tmp_path):
+def test_auto_demotion_mid_crawl_parity(
+    spark, fixture_dir, oracle_result, tmp_path, monkeypatch
+):
     """Mid-crawl broadcast->sharded bloom demotion (seen.py
     broadcast_max_delta) must preserve exact fetch-log/seen parity, the
     demoted MODE must be recorded in the snapshot meta, and a resume must
     come back sharded instead of collecting the bitsets to the driver
     (ADVICE r3 #4; VERDICT r3 next #6)."""
     from warchaeology_spark.frontier.checkpoint import SnapshotStore
+    from warchaeology_spark.frontier.seen import SeenState
 
+    def small_budget(*a, **kw):
+        st = SeenState(*a, **kw)  # the derived start mode is broadcast
+        # round-0 seed add is small; round-1+ novel counts exceed 5 on
+        # this fixture, so a max_delta of 5 forces a MID-crawl demotion
+        st.broadcast_max_delta = 5
+        return st
+
+    built = _route_seen_state(monkeypatch, small_budget)
     docs, seeds, robots, pol = _load_inputs(spark, fixture_dir)
     root = str(tmp_path / "snap")
-    # round-0 seed add is small; round-1+ novel counts exceed 5 on this
-    # fixture, so a max_delta of 5 forces a MID-crawl demotion
     demoted = run_crawl(
         spark, docs, seeds, robots, pol,
         CrawlConfig(max_rounds=3, num_partitions=4, expected_total=20_000,
-                    broadcast_max_delta=5, store_root=root),
+                    store_root=root),
     )
+    assert built[0].is_sharded
     oracle3 = [t for t in _oracle_tuples(oracle_result) if t[0] < 3]
     assert _fetch_tuples(demoted.fetch_log) == oracle3
     store = SnapshotStore(spark, root)
@@ -291,8 +305,9 @@ def test_auto_demotion_mid_crawl_parity(spark, fixture_dir, oracle_result, tmp_p
     resumed = run_crawl(
         spark, docs, seeds, robots, pol,
         CrawlConfig(max_rounds=5, num_partitions=4, expected_total=20_000,
-                    broadcast_max_delta=5, store_root=root, resume=True),
+                    store_root=root, resume=True),
     )
+    assert built[1].is_sharded
     assert _fetch_tuples(resumed.fetch_log) == _oracle_tuples(oracle_result)
     assert {r["surt"] for r in resumed.seen.collect()} == set(oracle_result.seen)
 
@@ -419,17 +434,6 @@ def test_all_seeds_denied_first_round_flush(spark, fixture_dir, tmp_path):
         CrawlConfig(max_rounds=3, store_root=root, resume=True),
     )
     assert resumed.fetch_log.count() == 0
-
-
-def test_commit_every_validation(spark, fixture_dir):
-    """ADVICE r6 low: commit_every=0 hit the in-loop modulo as a
-    ZeroDivisionError; negatives gave a nonsensical cadence. Both must
-    raise ValueError up front."""
-    docs, seeds, robots, pol = _load_inputs(spark, fixture_dir)
-    for bad in (0, -1):
-        with pytest.raises(ValueError, match="commit_every"):
-            run_crawl(spark, docs, seeds, robots, pol,
-                      CrawlConfig(max_rounds=1, commit_every=bad))
 
 
 def test_resume_refuses_jvm_bloom_manifest(spark, fixture_dir, tmp_path):

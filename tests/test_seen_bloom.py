@@ -1,12 +1,12 @@
-"""SeenState broadcast-bloom: per-round broadcast bytes must be
-proportional to the round DELTA (changed shards), never the full bitset
-set (VERDICT r1 finding #2), and membership must stay exact."""
+"""SeenState: one live broadcast per change of the driver shards, the
+serving mode derived from the bloom size, demotion to the cogroup-sharded
+mode, and exact membership in every mode."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from warchaeology_spark.frontier.seen import SeenState
+from warchaeology_spark.frontier.seen import SeenState, _bloom_params, _fits_broadcast
 
 
 def _urls(spark, hashes):
@@ -16,47 +16,42 @@ def _urls(spark, hashes):
     )
 
 
-def test_broadcast_bytes_track_delta_not_total(spark):
-    st = SeenState(spark, num_partitions=8, expected_total=80_000, use_bloom=True)
-    shard_bytes = st.m_bits // 8
+def test_broadcast_rebuilt_once_per_change(spark, monkeypatch):
+    """novel() keeps ONE live broadcast of every live driver shard: it is
+    rebuilt (and the previous one unpersisted) only when add() changed
+    bits, reused at 0 bytes otherwise, and membership is exact on every
+    call."""
+    from pyspark.broadcast import Broadcast
 
-    # round 1: keys spread over ALL 8 shards
-    st.add(_urls(spark, [i for i in range(64)]))
-    st.novel(_urls(spark, [999_001])).count()
-    assert st.last_broadcast_bytes == 8 * shard_bytes
+    unpersisted = []
+    real_unpersist = Broadcast.unpersist
 
-    # round 2: keys touch ONLY shard 0 (multiples of 8) -> 1-shard delta
-    st.add(_urls(spark, [8 * i for i in range(100, 140)]))
-    st.novel(_urls(spark, [999_002])).count()
-    assert st.last_broadcast_bytes == shard_bytes  # NOT 8 * shard_bytes
+    def recording_unpersist(self, blocking=False):
+        unpersisted.append(self)
+        return real_unpersist(self, blocking)
 
-    # membership stays exact across the delta chain
-    out = st.novel(_urls(spark, [3, 8 * 105, 999_003]))
-    got = {r["url_hash"] for r in out.collect()}
-    assert got == {999_003}
-
-
-def test_broadcast_chain_compacts(spark):
+    monkeypatch.setattr(Broadcast, "unpersist", recording_unpersist)
     st = SeenState(spark, num_partitions=4, expected_total=40_000, use_bloom=True)
-    compactions = 0
-    for r in range(6):
-        st.add(_urls(spark, [4 * r]))  # every round dirties shard 0 only
+    shard_bytes = st.m_bits // 8
+    built, added = [], []
+    for r in range(4):
+        # round r touches shards 0..r only (40*r is a multiple of P=4)
+        keys = [40 * r + p for p in range(r + 1)]
+        st.add(_urls(spark, keys))
+        added += keys
         # truncate the seen union each round, as run_crawl does
         st.seen = st.seen.localCheckpoint(eager=True)
-        chain_before = len(st._bc_chain)
-        got = {x["url_hash"] for x in st.novel(_urls(spark, [4 * r, 999_100 + r])).collect()}
+        got = {x["url_hash"] for x in st.novel(_urls(spark, keys + [999_000 + r])).collect()}
+        assert got == {999_000 + r}
+        # the rebuild ships every live shard, not just the changed ones
+        assert st.last_broadcast_bytes == (r + 1) * shard_bytes
+        built.append(st._bc)
+        # no add() in between: the same broadcast, nothing shipped
+        got = {x["url_hash"] for x in st.novel(_urls(spark, added + [999_100 + r])).collect()}
         assert got == {999_100 + r}
-        # novel() appended this round's delta; a shorter chain than
-        # before + 1 means the stale shard-0 entries were compacted away
-        compactions += len(st._bc_chain) <= chain_before
-        # the chain stays bounded after EVERY round, not only at the end
-        entries = sum(len(bc.value) for bc in st._bc_chain)
-        live = len({p for bc in st._bc_chain for p in bc.value})
-        assert entries <= 2 * max(live, 1)
-    assert compactions >= 2
-    # and the compacted chain still answers correctly
-    got = {r["url_hash"] for r in st.novel(_urls(spark, [0, 20, 999_999])).collect()}
-    assert got == {999_999}
+        assert st.last_broadcast_bytes == 0 and st._bc is built[-1]
+        live = [bc for bc in built if not any(bc is u for u in unpersisted)]
+        assert live == [st._bc]
 
 
 def test_restore_seeds_driver_shards(spark):
@@ -81,6 +76,8 @@ def test_large_delta_auto_demotes_to_sharded(spark, monkeypatch):
     st.broadcast_max_delta = 50
     st.add(_urls(spark, list(range(10))))  # small delta: broadcast path
     assert st.broadcast_bloom and st._shards
+    st.novel(_urls(spark, [1])).count()  # builds the live broadcast
+    assert st._bc is not None
 
     def no_driver_rows(self, *a, **kw):
         raise AssertionError("row data pulled through the driver on a large delta")
@@ -89,7 +86,7 @@ def test_large_delta_auto_demotes_to_sharded(spark, monkeypatch):
     big = _urls(spark, list(range(1000, 1100)))  # 100 rows > 50
     st.add(big, n_rows=100)
     assert not st.broadcast_bloom  # demoted, one-way
-    assert not st._shards and not st._bc_chain
+    assert not st._shards and st._bc is None
     monkeypatch.undo()
 
     # pre-demotion bits migrated + post-demotion bits set, both effective
@@ -109,6 +106,38 @@ def test_add_without_hint_counts_before_collecting(spark):
     assert not st.broadcast_bloom
     got = {r["url_hash"] for r in st.novel(_urls(spark, [7, 555])).collect()}
     assert got == {555}
+
+
+def test_add_without_hint_counts_rows_in_every_mode(spark):
+    # the hint-less row count feeds seen_rows_approx (the novel() join
+    # shape) the same way whichever serving mode the state is in
+    approx = {}
+    for max_delta in (10_000_000, 0):  # derived start: broadcast, sharded
+        st = SeenState(spark, num_partitions=4, expected_total=40_000,
+                       broadcast_max_delta=max_delta)
+        st.add(_urls(spark, list(range(30))))
+        approx[st.is_sharded] = st.seen_rows_approx
+    assert approx == {False: 30, True: 30}
+
+
+def test_start_mode_derived_from_bloom_size():
+    # 10^10 design point: 4096 shards of 10^10/4096 keys at 1% fpp hold
+    # ~12 GB of bitsets — far above the 80 MB per-round driver budget, so
+    # the state starts cogroup-sharded (sized, never allocated, here)
+    m_bits, k = _bloom_params(10**10 // 4096, 0.01)
+    assert k == 7 and round(4096 * m_bits / 8 / 1e9, 2) == 11.98
+    assert not _fits_broadcast(4096, m_bits, SeenState.broadcast_max_delta)
+    # today's callers keep broadcast mode: perfbench, bench.py mid and
+    # mid30x (default budget), the bench.py kernel at 4M and 16M URLs
+    # (budget = n_urls)
+    for p, n, max_delta in (
+        (8, 125_000, SeenState.broadcast_max_delta),
+        (8, 5_000_000, SeenState.broadcast_max_delta),
+        (8, 25_000_000, SeenState.broadcast_max_delta),
+        (4, 4_000_000, 4_000_000),
+        (4, 16_000_000, 16_000_000),
+    ):
+        assert _fits_broadcast(p, _bloom_params(n // p, 0.01)[0], max_delta)
 
 
 def test_slim_and_branchy_novel_shapes_agree(spark):

@@ -58,10 +58,7 @@ def main() -> None:
     urls = spark.range(n_urls, numPartitions=cpus * 2).select(raw.alias("raw_url"))
     seen = SeenState(
         spark, num_partitions=cpus, expected_total=n_urls, use_bloom=True,
-        broadcast_bloom=True, broadcast_max_delta=n_urls,
-        fpp_checkpoint_tested=os.environ.get(
-            "SPARK_GRAFT_KERNEL_FPP_CKPT", "1"  # default matches bench.py
-        ) == "1",
+        broadcast_max_delta=n_urls, fpp_checkpoint_tested=True,  # as bench.py
     )
     pre = spark.range(0, n_urls, 2, numPartitions=cpus).select(
         F.format_string(
@@ -83,11 +80,9 @@ def main() -> None:
         canon_step = (
             in_urls.select(canonicalize_url(F.col("raw_url")).alias("url_canon"))
             .filter(F.col("url_canon").isNotNull())
-            .localCheckpoint(
-                # default LAZY, matching bench.py run_kernel — the profile
-                # must attribute the shape the ladder actually measures
-                eager=os.environ.get("SPARK_GRAFT_KERNEL_LAZY_CANON", "1") == "0"
-            )
+            # lazy, as in bench.py run_kernel — the profile must attribute
+            # the shape the ladder actually measures
+            .localCheckpoint(eager=False)
         )
         d = parts_from_canon(F.col("url_canon"))
         cand = canon_step.select(

@@ -61,22 +61,12 @@ class CrawlConfig:
     default_budget: int = 2
     n_salts: int = 8
     use_bloom: bool = True
-    broadcast_bloom: bool = True  # False -> cogroup-sharded bloom (seen.py)
-    # override SeenState.broadcast_max_delta (rows per add() above which
-    # broadcast mode self-demotes to cogroup-sharded); None = seen.py default
-    broadcast_max_delta: int | None = None
     num_partitions: int = 8
     expected_total: int = 100_000
-    store_root: str | None = None  # enables checkpoint/resume
+    # enables checkpoint/resume: every round commits a snapshot, so a kill
+    # loses only the round in flight and resume replays it exactly
+    store_root: str | None = None
     resume: bool = False
-    # Commit a snapshot every k rounds instead of every round (VERDICT r5
-    # next #3: per-round fixed cost). Uncommitted round deltas accumulate
-    # in driver-side lists of lazy DataFrames and are appended in ONE
-    # commit, so a kill loses at most k-1 rounds of progress and resume
-    # replays from the last committed round exactly as before (the
-    # manifest's next_round is the first uncommitted one). The final
-    # (or early-terminating) round always commits.
-    commit_every: int = 1
 
 
 @dataclass
@@ -141,12 +131,6 @@ def run_crawl(
     politeness: DataFrame,
     config: CrawlConfig = CrawlConfig(),
 ) -> CrawlResult:
-    if config.commit_every < 1:
-        # 0 would hit the in-loop modulo as a ZeroDivisionError and negative
-        # values would produce a nonsensical commit cadence (ADVICE r6 low)
-        raise ValueError(
-            f"commit_every must be >= 1, got {config.commit_every}"
-        )
     store = SnapshotStore(spark, config.store_root) if config.store_root else None
     if store and not config.resume and store.latest_version() is not None:
         # A fresh crawl must not chain onto an old crawl's append deltas:
@@ -166,12 +150,6 @@ def run_crawl(
         num_partitions=config.num_partitions,
         expected_total=config.expected_total,
         use_bloom=config.use_bloom,
-        broadcast_bloom=config.broadcast_bloom,
-        **(
-            {"broadcast_max_delta": config.broadcast_max_delta}
-            if config.broadcast_max_delta is not None
-            else {}
-        ),
     )
     # robots input is either the pre-parsed (host, path_pref, allow)
     # prefix table (fixture/oracle model, any-disallow-prefix semantics)
@@ -195,7 +173,7 @@ def run_crawl(
     metrics: list[dict] = []
     partition_metrics: list[dict] = []
     # committed vs uncommitted split: commits APPEND only the uncommitted
-    # round deltas (seen rows added, fetch rows logged since last commit) —
+    # deltas (seen rows added, fetch rows logged since the last commit) —
     # per-round committed bytes are proportional to the round delta, not
     # the accumulated state (VERDICT r2 #4)
     fetch_log_base: DataFrame | None = None
@@ -208,7 +186,7 @@ def run_crawl(
         # apply the committed seen-state mode BEFORE restore: a crawl that
         # auto-demoted to sharded must resume sharded (ADVICE r3 #4), and
         # bloom setter semantics depend on the mode. Pre-r4 manifests have
-        # no seen_state entry -> keep the configured defaults.
+        # no seen_state entry -> keep the mode derived from the bloom size.
         ss_meta = m.get("seen_state", {})
         if ss_meta.get("jvm_bloom"):
             # stores written by the retired JVM serving mode hold one
@@ -262,9 +240,9 @@ def run_crawl(
     timings: list[dict] = []
 
     def _commit_snapshot(next_round: int) -> None:
-        """One snapshot commit: append the accumulated (possibly multi-
-        round) seen/fetch deltas, rewrite pending + bloom, then re-read to
-        truncate lineage at the snapshot boundary."""
+        """One snapshot commit: append the seen/fetch deltas since the last
+        commit, rewrite pending + bloom, then re-read to truncate lineage
+        at the snapshot boundary."""
         nonlocal fetch_logs, seen_deltas, pending, fetch_log_base
         # Either delta list may be empty at a flush (e.g. a fresh crawl whose
         # FIRST round schedules nothing: seen_deltas holds the seed delta but
@@ -316,11 +294,9 @@ def run_crawl(
         # re-read to truncate lineage at the snapshot boundary. The
         # bloom is NOT restored in broadcast mode: the driver shards
         # are already authoritative and have no lineage to truncate —
-        # re-seeding them here would collect the full bitset set to
-        # the driver and mark every shard dirty (a full rebroadcast
-        # next round), reinstating exactly the per-round full-bloom
-        # round-trip the delta-broadcast chain eliminates. Shards are
-        # seeded from the store only on an actual resume.
+        # re-seeding them here would collect the full bitset set back
+        # to the driver every round. Shards are seeded from the store
+        # only on an actual resume.
         pending = store.load("pending")
         reload_bloom = seen_state.is_sharded
         # assume_large=False: this is the in-loop lineage-truncation
@@ -456,9 +432,9 @@ def run_crawl(
         n_denied = int(next(x["value"] for x in stats if x["kind"] == "denied"))
         tr["stats_collect_sec"] = round(_time.monotonic() - t0, 3)
         if n_sched == 0:
-            # nothing scheduled -> the (empty) round changed no state;
-            # flush any deltas deferred by commit_every before stopping
-            if store and (fetch_logs or seen_deltas):
+            # nothing scheduled -> the (empty) round changed no state; a
+            # fresh crawl stopping here still commits its seed delta
+            if store and seen_deltas:
                 _commit_snapshot(r)
             break
         fetch_logs.append(fetch_log_r)
@@ -476,9 +452,9 @@ def run_crawl(
         pending = pending.unionByName(allowed).localCheckpoint(eager=False)
         seen_state.seen = seen_state.seen.localCheckpoint(eager=False)
         if seen_state.is_sharded:
-            # sharded mode (configured, or auto-demoted on a large delta):
-            # truncate the cogroup lineage. Broadcast mode keeps its bits
-            # on the driver — nothing to checkpoint here.
+            # sharded mode (derived from the bloom size, or auto-demoted on
+            # a large delta): truncate the cogroup lineage. Broadcast mode
+            # keeps its bits on the driver — nothing to checkpoint here.
             seen_state.bloom = seen_state.bloom.localCheckpoint(eager=True)
         tr["state_ckpt_sec"] = round(_time.monotonic() - t0, 3)
 
@@ -499,10 +475,7 @@ def run_crawl(
             {"round": r, "scheduled_per_partition": {int(x["pid"]): x["value"] for x in part_rows}}
         )
 
-        if store and (
-            (r + 1 - start_round) % config.commit_every == 0
-            or r == config.max_rounds - 1
-        ):
+        if store:
             t0 = _time.monotonic()
             _commit_snapshot(r + 1)
             tr["commit_sec"] = round(_time.monotonic() - t0, 3)
