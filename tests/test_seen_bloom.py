@@ -16,11 +16,41 @@ def _urls(spark, hashes):
     )
 
 
-def test_broadcast_rebuilt_once_per_change(spark, monkeypatch):
-    """novel() keeps ONE live broadcast of every live driver shard: it is
-    rebuilt (and the previous one unpersisted) only when add() changed
-    bits, reused at 0 bytes otherwise, and membership is exact on every
-    call."""
+def test_broadcast_bytes_track_delta_not_total(spark):
+    """Broadcast bytes follow the delta: a novel() after an add() ships
+    the live driver shards once, a novel() with no add() in between
+    ships nothing and reuses the same broadcast; membership stays exact."""
+    st = SeenState(spark, num_partitions=8, expected_total=80_000, use_bloom=True)
+    shard_bytes = st.m_bits // 8
+
+    # round 1: keys spread over ALL 8 shards
+    st.add(_urls(spark, [i for i in range(64)]))
+    st.novel(_urls(spark, [999_001])).count()
+    assert st.last_broadcast_bytes == 8 * shard_bytes
+    first = st._bc
+
+    # no delta since the last build: nothing shipped, same broadcast
+    st.novel(_urls(spark, [999_002])).count()
+    assert st.last_broadcast_bytes == 0 and st._bc is first
+
+    # round 2: keys touch ONLY shard 0 (multiples of 8); the rebuild
+    # ships every live shard in one broadcast
+    st.add(_urls(spark, [8 * i for i in range(100, 140)]))
+    st.novel(_urls(spark, [999_003])).count()
+    assert st.last_broadcast_bytes == 8 * shard_bytes
+    assert st._bc is not first
+
+    # membership stays exact across the rebuild
+    out = st.novel(_urls(spark, [3, 8 * 105, 999_004]))
+    got = {r["url_hash"] for r in out.collect()}
+    assert got == {999_004}
+    assert st.last_broadcast_bytes == 0
+
+
+def test_broadcast_chain_compacts(spark, monkeypatch):
+    """The broadcast chain is at most one long: every rebuild unpersists
+    the previous broadcast, so after EVERY round exactly one broadcast is
+    live, and it answers membership exactly."""
     from pyspark.broadcast import Broadcast
 
     unpersisted = []
@@ -46,12 +76,11 @@ def test_broadcast_rebuilt_once_per_change(spark, monkeypatch):
         # the rebuild ships every live shard, not just the changed ones
         assert st.last_broadcast_bytes == (r + 1) * shard_bytes
         built.append(st._bc)
-        # no add() in between: the same broadcast, nothing shipped
-        got = {x["url_hash"] for x in st.novel(_urls(spark, added + [999_100 + r])).collect()}
-        assert got == {999_100 + r}
-        assert st.last_broadcast_bytes == 0 and st._bc is built[-1]
         live = [bc for bc in built if not any(bc is u for u in unpersisted)]
         assert live == [st._bc]
+    # and the single live broadcast still answers correctly
+    got = {x["url_hash"] for x in st.novel(_urls(spark, added + [999_999])).collect()}
+    assert got == {999_999}
 
 
 def test_restore_seeds_driver_shards(spark):
