@@ -411,11 +411,12 @@ def test_all_seeds_denied_first_round_flush(spark, fixture_dir, tmp_path):
     seen_deltas=[seed delta] but fetch_logs=[] — pre-fix this crashed with
     IndexError in _commit_snapshot. Must instead commit the seed delta,
     omit the fetch_log append, and finish with an empty fetch log."""
-    from warchaeology_spark.functions.urls import host_of
+    from warchaeology_spark.functions.urls import canonical_parts
 
     docs, seeds, robots, pol = _load_inputs(spark, fixture_dir)
     deny_all = (
-        seeds.select(host_of("url").alias("host"))
+        seeds.select(canonical_parts("url")["host"].alias("host"))
+        .filter(F.col("host").isNotNull())
         .unionByName(robots.select("host"))
         .distinct()
         .select("host", F.lit("/").alias("path_pref"), F.lit(False).alias("allow"))

@@ -13,9 +13,10 @@ from warchaeology_spark.functions.strings import (
     parse_size_in_bytes,
 )
 from warchaeology_spark.functions.urls import (
+    canonical_parts,
     canonicalize_py,
     canonicalize_url,
-    canonicalize_url_lenient,
+    canonicalize_url_arrow,
     surt_key,
     xxhash64_py,
 )
@@ -35,19 +36,22 @@ URLS = [
 
 
 def test_canonicalize_three_way_agreement(spark):
-    """JVM builtin path == pandas-UDF lenient path == pure-Python oracle."""
+    """JVM builtin path == Arrow UDF path == pure-Python oracle, on every
+    field the oracle returns (url_canon, surt, host)."""
     df = spark.createDataFrame([(u,) for u in URLS], "url string")
     rows = df.select(
         "url",
         canonicalize_url("url").alias("canon"),
         surt_key("url").alias("surt"),
-        canonicalize_url_lenient(F.col("url")).alias("lenient"),
+        canonical_parts("url")["host"].alias("host"),
+        canonicalize_url_arrow(F.col("url")).alias("arrow"),
     ).collect()
     for r in rows:
         py = canonicalize_py(r["url"])
         assert r["canon"] == (py[0] if py else None), r["url"]
         assert r["surt"] == (py[1] if py else None), r["url"]
-        assert r["lenient"] == r["canon"], r["url"]
+        assert r["host"] == (py[2] if py else None), r["url"]
+        assert r["arrow"] == r["canon"], r["url"]
 
 
 def test_xxhash64_matches_spark(spark):

@@ -607,20 +607,14 @@ def test_minhash_persisted_index_matches_inline_cross_pairs(spark, tmp_path):
     assert not any(nid == "n2" for nid, _ in served)  # distinct text is not
 
 
-def test_embedding_neardup_paths_bit_identical(spark, monkeypatch):
-    """r8 optimization pin: the vectorized per-block GEMM path, the flat
-    codegen-expression path and the original HOF-cosine path of
-    embedding_neardup_pairs produce IDENTICAL rows (same cos_sim doubles
-    after round) — the per-dimension accumulation preserves the JVM
-    fold's association exactly."""
+def test_embedding_neardup_paths_bit_identical(spark):
+    """The per-block GEMM kernel behind embedding_neardup_pairs and the
+    original HOF-cosine join produce IDENTICAL rows (same cos_sim doubles
+    after round)."""
     from warchaeology_spark import queries as Q
 
     sf = SF
-    monkeypatch.setenv("SPARK_GRAFT_EMB_PAIRS", "gemm")
     gemm = {tuple(r) for r in Q.embedding_neardup_pairs(spark, sf).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_EMB_PAIRS", "flat")
-    flat = {tuple(r) for r in Q.embedding_neardup_pairs(spark, sf).collect()}
-    assert gemm == flat
     assert len(gemm) > 0
     # HOF reference (the pre-r8 implementation, kept in similarity.cosine)
     from warchaeology_spark.operators.similarity import cosine
@@ -670,6 +664,52 @@ def test_block_neardup_candidates_margin_keeps_boundary(spark):
     )
     out = block_neardup_candidates(df, 0.2).collect()
     assert len(out) == 1  # kept by the margin, even though raw < 0.2
+
+
+def test_block_neardup_cos_raw_equals_jvm_cosine_bits(spark):
+    """cos_raw is the JVM fold's cosine double bit for bit, also on
+    vectors where a plain BLAS ``V @ V.T`` rounds a dot differently."""
+    from warchaeology_spark.operators.similarity import (
+        block_neardup_candidates,
+        cosine,
+    )
+
+    rng = np.random.default_rng(20261019)
+    # d=256: NumPy's OpenBLAS sums dots this long in another order than
+    # the left fold (at d=64 its sums often agree with the fold)
+    n, d = 24, 256
+    V = rng.standard_normal((n, d)).astype(np.float32).astype(np.float64)
+    fold = np.zeros((n, n))
+    for k in range(d):
+        fold += np.multiply.outer(V[:, k], V[:, k])
+    nrm = np.sqrt(np.diag(fold))
+    upper = np.triu_indices(n, 1)
+    gemm_cos = ((V @ V.T) / np.multiply.outer(nrm, nrm))[upper]
+    fold_cos = (fold / np.multiply.outer(nrm, nrm))[upper]
+    assert (gemm_cos != fold_cos).any()  # the recompute has something to fix
+
+    df = spark.createDataFrame(
+        [(i, 0, [float(x) for x in V[i]]) for i in range(n)],
+        "vec_id long, label int, embedding array<float>",
+    )
+    # threshold -1: every pair passes the filter, so every cos_raw is checked
+    got = {
+        (r["id_a"], r["id_b"]): r["cos_raw"]
+        for r in block_neardup_candidates(df, -1.0).collect()
+    }
+    a, b = df.alias("a"), df.alias("b")
+    ref = {
+        (r["id_a"], r["id_b"]): r["c"]
+        for r in a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))
+        .select(
+            F.col("a.vec_id").alias("id_a"),
+            F.col("b.vec_id").alias("id_b"),
+            cosine(F.col("a.embedding"), F.col("b.embedding")).alias("c"),
+        )
+        .collect()
+    }
+    assert len(ref) == n * (n - 1) // 2
+    assert got == ref
 
 
 def test_shingle_rows_matches_word_shingles_multiset(docs, spark):

@@ -178,7 +178,7 @@ def run_crawl(
     # the accumulated state (VERDICT r2 #4)
     fetch_log_base: DataFrame | None = None
     fetch_logs: list[DataFrame] = []  # uncommitted round logs
-    seen_deltas: list[DataFrame] = []  # uncommitted seen additions
+    seen_deltas: list[DataFrame] = []  # uncommitted seen additions (store only)
     start_round = 0
 
     if store and config.resume and store.latest_version() is not None:
@@ -215,6 +215,7 @@ def run_crawl(
         )
         if "fetch_log" in store.manifest()["tables"]:
             fetch_log_base = store.load("fetch_log")
+        n_pending = pending.count()
     else:
         gated = gate(_init_pending(seeds))
         gated = gated.localCheckpoint(eager=True)
@@ -225,17 +226,10 @@ def run_crawl(
             F.sum(F.col("robots_denied").cast("long")).alias("d"),
         ).collect()[0]
         seen_state.add(gated, n_rows=c0["n"])  # denied seeds are seen too
-        seen_deltas.append(gated.select("url_hash", "surt", "url_canon"))
+        if store:
+            seen_deltas.append(gated.select("url_hash", "surt", "url_canon"))
         pending = gated.filter(~F.col("robots_denied")).select(*PENDING_COLS)
         pending = pending.localCheckpoint(eager=True)
-
-    # pending size is tracked arithmetically across rounds (one count at
-    # init, then pending_after = pending - scheduled + allowed) — saves a
-    # driver action per round; at toy round sizes fixed per-round job cost
-    # dominates the driver throughput metric.
-    if store and config.resume and store.latest_version() is not None:
-        n_pending = pending.count()
-    else:
         n_pending = c0["n"] - int(c0["d"] or 0)
     timings: list[dict] = []
 
@@ -442,7 +436,8 @@ def run_crawl(
 
         t0 = _time.monotonic()
         seen_state.add(gated, n_rows=n_novel)  # hint: auto mode-demotion
-        seen_deltas.append(gated.select("url_hash", "surt", "url_canon"))
+        if store:
+            seen_deltas.append(gated.select("url_hash", "surt", "url_canon"))
         allowed = gated.filter(~F.col("robots_denied")).select(*PENDING_COLS)
         tr["seen_add_sec"] = round(_time.monotonic() - t0, 3)
         # carry-over state: the lineage cut still happens, but
@@ -460,7 +455,9 @@ def run_crawl(
 
         # derived, not re-counted: pending' = pending - scheduled + allowed
         # (the scheduled anti-join removes exactly n_sched rows — scheduled
-        # is a subset of pending by construction; allowed = novel - denied)
+        # is a subset of pending by construction; allowed = novel - denied).
+        # Saves a driver action per round; at toy round sizes fixed
+        # per-round job cost dominates the driver throughput metric.
         n_pending = n_pending - n_sched + (n_novel - n_denied)
         metrics.append(
             {

@@ -23,6 +23,5 @@ from warchaeology_spark.functions.urls import (  # noqa: F401
     url_parts,
     canonicalize_url,
     surt_key,
-    url_hash64,
     xxhash64_py,
 )

@@ -10,7 +10,8 @@ Two paths, per the build charter:
   n_planes.
 
 Embedding-cosine near-dup (training-data dedup by semantic similarity) is
-the same machinery with query == corpus and a threshold instead of top-k.
+block_neardup_candidates: query == corpus within each block, a threshold
+instead of top-k.
 """
 
 from __future__ import annotations
@@ -79,10 +80,6 @@ def norm_flat(a: Column, dim: int) -> Column:
     return F.sqrt(acc)
 
 
-def cosine_flat(a: Column, b: Column, dim: int) -> Column:
-    return dot_flat(a, b, dim) / (norm_flat(a, dim) * norm_flat(b, dim))
-
-
 def block_neardup_candidates(
     vectors: DataFrame,
     threshold: float,
@@ -98,21 +95,21 @@ def block_neardup_candidates(
     HALF_UP, the rounding authority — makes the final cut; no pair that
     could round up to the threshold is dropped here).
 
-    Equivalence with the JVM fold (dot()/dot_flat, norm()) is NOT
-    bit-for-bit: the squared norms still accumulate one dimension at a
-    time in the fold's order, but the dot products come from a BLAS
-    matmul whose summation order differs from the left fold, so cos_raw
-    can differ from the JVM double by a few ulp. Equality holds only
-    after the caller's ``round(cos_raw, 4)``, and only empirically (no
-    pair on the committed SFs sits within those ulp of a 4-dp rounding
-    midpoint or of the threshold). ``SPARK_GRAFT_EMB_PAIRS=flat`` is the
-    fold-order-exact fallback.
+    ``cos_raw`` equals ``cosine()``'s double bit for bit. The BLAS
+    matmul is only the filter: its summation order differs from the
+    JVM's left fold, by at most about 2·d·2⁻⁵³ in cosine (1.4e-14 at
+    d=64), far inside the 1e-3 margin, so it keeps every pair the fold
+    keeps. For each pair it emits, the dot is then recomputed in the
+    fold's order (``acc + a[k]*b[k]`` for k = 0..d-1, one dimension at a
+    time) and divided by the norms, which accumulate in the same order.
+    The caller's ``round`` therefore sees the JVM's exact double, and no
+    4-dp midpoint or threshold tie can come out differently.
 
     Scale shape: one shuffle on block_col; per-block work is the
-    inherently-quadratic pair set evaluated as 64 vectorized rank-1
-    updates (BLAS-speed) instead of per-pair interpreted folds. Blocks
-    are the caller's blocking scheme (labels here, LSH buckets at scale),
-    so no single task ever sees more than one block.
+    inherently-quadratic pair set filtered by one BLAS matmul per row
+    tile instead of per-pair interpreted folds. Blocks are the caller's
+    blocking scheme (labels here, LSH buckets at scale), so no single
+    task ever sees more than one block.
     """
     import numpy as np  # noqa: F401  (imported in the worker too)
     import pandas as pd
@@ -131,10 +128,11 @@ def block_neardup_candidates(
         pdf = pdf.sort_values(id_col)
         ids = pdf[id_col].to_numpy()
         V = np.stack([np.asarray(v, dtype=np.float64) for v in pdf[vec_col]])
-        d = V.shape[1]
+        # one contiguous row per dimension: the fold-order loops below
+        # read one dimension at a time and gather only the pairs' entries
+        cols = np.ascontiguousarray(V.T)
         nsq = np.zeros(n, dtype=np.float64)
-        for k in range(d):
-            col = V[:, k]
+        for col in cols:
             nsq += col * col
         nrm = np.sqrt(nsq)
         # row-tiled so the pair matrix never exceeds ~256 MB even for
@@ -143,24 +141,22 @@ def block_neardup_candidates(
         out_a, out_b, out_c = [], [], []
         for i0 in range(0, n, tile):
             i1 = min(i0 + tile, n)
-            # BLAS matmul: float32→double products are exact; only the
-            # SUMMATION order differs from the JVM fold (BLAS blocks vs
-            # left fold), a ≤few-ulp difference that is empirically
-            # bit-identical after round(.,4) on every committed SF
-            # (sym-diff 0 at sf0.001/0.01/0.1/1.0 — the driver's
-            # correctness SFs are exactly these files). The r8 first cut
-            # accumulated one dimension at a time to preserve the fold
-            # order exactly, but that is memory-traffic-bound — d full
-            # n×tile temps per tile — and measured 390 s on a single 20k
-            # block vs ~2 s for BLAS; SPARK_GRAFT_EMB_PAIRS=flat remains
-            # the fold-order-exact fallback.
+            # BLAS filter: float32→double products are exact, only the
+            # summation order differs from the fold (see docstring)
             T = V[i0:i1] @ V.T
             cosT = T / np.multiply.outer(nrm[i0:i1], nrm)
             ii, jj = np.nonzero(cosT >= margin)
             keep = jj > (ii + i0)  # id_a < id_b (rows sorted by id)
-            out_a.append(ids[ii[keep] + i0])
-            out_b.append(ids[jj[keep]])
-            out_c.append(cosT[ii[keep], jj[keep]])
+            a, b = ii[keep] + i0, jj[keep]
+            # exact value: the dot in the JVM fold's order, over the
+            # emitted pairs only (the r8 first cut folded the full n×tile
+            # matrix this way: 390 s on one 20k block vs ~2 s for BLAS)
+            acc = np.zeros(len(a), dtype=np.float64)
+            for col in cols:
+                acc += col[a] * col[b]
+            out_a.append(ids[a])
+            out_b.append(ids[b])
+            out_c.append(acc / (nrm[a] * nrm[b]))
         return pd.DataFrame(
             {
                 "id_a": np.concatenate(out_a).astype("int64"),
@@ -461,33 +457,4 @@ def ivf_topk_from_index(
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select(query_id_col, id_col, "cos_sim", "rank")
-    )
-
-
-def embedding_neardups(
-    vectors: DataFrame,
-    threshold: float = 0.98,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = 8,
-) -> DataFrame:
-    """Near-duplicate pairs by embedding cosine, LSH-blocked (id_a < id_b)."""
-    vb = hyperplane_buckets(vectors, n_planes, id_col, vec_col)
-    a = vb.alias("a")
-    b = vb.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
-        )
-        .withColumn(
-            "cos_sim", F.round(cosine(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")), 4)
-        )
-        .filter(F.col("cos_sim") >= threshold)
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-            "cos_sim",
-        )
     )

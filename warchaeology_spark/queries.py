@@ -33,7 +33,6 @@ from pyspark.sql import functions as F
 from warchaeology_spark.functions.dates import parse_http_date
 from warchaeology_spark.functions.strings import crop_string, normalize_record_id
 from warchaeology_spark.functions.urls import canonicalize_url, surt_key
-from warchaeology_spark.operators.similarity import cosine
 from warchaeology_spark.operators.textdedup import (
     dedup_clusters,
     dedup_keep_canonical,
@@ -822,22 +821,24 @@ def _shared_ngram_dense(spark: SparkSession, sf: str):
     return entry
 
 
+# largest shingle vocabulary the dense n-gram Jaccard kernel takes: a
+# doc-block x vocab float32 tile must fit a task (~100-300 MB); larger,
+# web-scale vocabularies take the prefix join (OPTIMIZATION_r08.md)
+_NGRAM_DENSE_MAX_VOCAB = 16384
+
+
 def _ngram_pairs_engine(spark: SparkSession, sf: str, portable: bool) -> DataFrame:
     """Engine dispatch for the ngram registry entries: the corpus's
     shingle vocabulary is probed once (cheap distinct count); when it is
-    dense (below SPARK_GRAFT_NGRAM_DENSE_MAX_VOCAB, default 16384 — the
-    regime where prefix filtering degenerates to ~quadratic candidates)
-    the exact BLAS kernel runs; otherwise the general AllPairs/PPJoin
-    prefix-filter join. Both produce the identical declared result."""
-    import os as _os
-
+    dense (at most _NGRAM_DENSE_MAX_VOCAB shingles — the regime where
+    prefix filtering degenerates to ~quadratic candidates) the exact BLAS
+    kernel runs; otherwise the general AllPairs/PPJoin prefix-filter join.
+    Both produce the identical declared result."""
     from warchaeology_spark.operators.textdedup import ngram_jaccard_dense
 
-    max_vocab = int(_os.environ.get("SPARK_GRAFT_NGRAM_DENSE_MAX_VOCAB", "16384"))
-    if max_vocab > 0:
-        grouped, n_vocab = _shared_ngram_dense(spark, sf)
-        if n_vocab <= max_vocab:
-            return ngram_jaccard_dense(grouped, n_vocab, threshold=0.6)
+    grouped, n_vocab = _shared_ngram_dense(spark, sf)
+    if n_vocab <= _NGRAM_DENSE_MAX_VOCAB:
+        return ngram_jaccard_dense(grouped, n_vocab, threshold=0.6)
     return ngram_jaccard_neardups(
         T(spark, sf, "documents"), threshold=0.6, portable=portable,
         shingled=_shared_ngram_shingles(spark, sf),
@@ -1231,80 +1232,16 @@ def embedding_neardup_pairs(spark, sf):
     # r8 optimization (guide §3.1/§4.1): the pair set is quadratic within
     # each of the ~10 labels, so the per-pair cosine dominates — the old
     # interpreted-HOF cosine (3 lambda folds over the full vector per
-    # pair) cost 821 s at sf1.0. The default path is now the vectorized
-    # per-label BLAS kernel below; the SPARK_GRAFT_EMB_PAIRS=flat fallback
-    # keeps per-row norms computed once before the join, a flat codegen
-    # dot per pair (bit-identical fold order, see similarity.dot_flat),
-    # and a broadcast hash join on label with the streamed side
-    # round-robin repartitioned so the quadratic compute spreads over
-    # every core instead of 10 join keys.
-    import os as _os
+    # pair) cost 821 s at sf1.0. The per-label kernel filters with BLAS
+    # and returns the JVM fold's cosine bit for bit (see
+    # block_neardup_candidates); JVM keeps the round+threshold.
+    from warchaeology_spark.operators.similarity import block_neardup_candidates
 
-    from warchaeology_spark.operators.similarity import (
-        block_neardup_candidates,
-        dot_flat,
-        first_dim,
-        norm_flat,
-    )
-
-    emb = T(spark, sf, "embeddings")
-    if _os.environ.get("SPARK_GRAFT_EMB_PAIRS", "gemm") == "gemm":
-        # vectorized per-label all-pairs (BLAS summation order, so equal
-        # to the JVM fold only after round(.,4), empirically — see
-        # block_neardup_candidates); JVM keeps the round+threshold
-        cand = block_neardup_candidates(emb, 0.2)
-        return (
-            cand.withColumn("cos_sim", F.round(F.col("cos_raw"), 4))
-            .filter(F.col("cos_sim") >= 0.2)
-            .select("id_a", "id_b", "cos_sim")
-        )
-    dim = first_dim(emb, "embedding")
-    if dim is None:
-        a0, b0 = emb.alias("a"), emb.alias("b")
-        return (
-            a0.join(
-                b0,
-                (F.col("a.label") == F.col("b.label"))
-                & (F.col("a.vec_id") < F.col("b.vec_id")),
-            )
-            .withColumn(
-                "cos_sim",
-                F.round(cosine(F.col("a.embedding"), F.col("b.embedding")), 4),
-            )
-            .filter(F.col("cos_sim") >= 0.2)
-            .select(
-                F.col("a.vec_id").alias("id_a"),
-                F.col("b.vec_id").alias("id_b"),
-                "cos_sim",
-            )
-        )
-    par = spark.sparkContext.defaultParallelism * 4
-    withn = emb.select(
-        "vec_id", "label", "embedding",
-        norm_flat(F.col("embedding"), dim).alias("_nrm"),
-    )
-    a = withn.repartition(par).alias("a")
-    b = withn.alias("b")
+    cand = block_neardup_candidates(T(spark, sf, "embeddings"), 0.2)
     return (
-        a.join(
-            F.broadcast(b),
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .withColumn(
-            "cos_sim",
-            F.round(
-                dot_flat(F.col("a.embedding"), F.col("b.embedding"), dim)
-                / (F.col("a._nrm") * F.col("b._nrm")),
-                4,
-            ),
-        )
+        cand.withColumn("cos_sim", F.round(F.col("cos_raw"), 4))
         .filter(F.col("cos_sim") >= 0.2)
-        .select(
-            F.col("a.vec_id").alias("id_a"),
-            F.col("b.vec_id").alias("id_b"),
-            "cos_sim",
-        )
+        .select("id_a", "id_b", "cos_sim")
     )
 
 
