@@ -142,6 +142,8 @@ def test_checkpoint_resume(spark, fixture_dir, oracle_result, tmp_path):
     assert _fetch_tuples(resumed.fetch_log) == _oracle_tuples(oracle_result)
     engine_seen = {r["surt"] for r in resumed.seen.collect()}
     assert engine_seen == set(oracle_result.seen)
+    # pending_after continues from the manifest's last metrics row
+    assert resumed.metrics == oracle_result.metrics
 
 
 def test_kill_with_uncommitted_deferred_rounds_resumes_exactly(
@@ -180,6 +182,7 @@ def test_kill_with_uncommitted_deferred_rounds_resumes_exactly(
     assert resumed.rounds_run == 4
     assert _fetch_tuples(resumed.fetch_log) == _oracle_tuples(oracle_result)
     assert {r["surt"] for r in resumed.seen.collect()} == set(oracle_result.seen)
+    assert resumed.metrics == oracle_result.metrics
 
 
 def test_delta_commits_write_round_delta_not_full_state(spark, fixture_dir, oracle_result, tmp_path):
@@ -458,3 +461,29 @@ def test_resume_refuses_jvm_bloom_manifest(spark, fixture_dir, tmp_path):
     with pytest.raises(ValueError, match="JVM bloom"):
         run_crawl(spark, docs, seeds, robots, pol,
                   CrawlConfig(max_rounds=2, store_root=root, resume=True))
+
+
+# Spark jobs of a fresh 1-round crawl over the t1 fixture plus one collect
+# of its fetch log, local[8]: 30 while the seed step checkpointed eagerly,
+# the round stats ran two aggregates and global_sequence numbered rows in
+# a mapInPandas pass; 26 since.
+MAX_ONE_ROUND_JOBS = 26
+
+
+def test_one_round_crawl_job_count(spark, fixture_dir, oracle_result):
+    """Fixed per-round cost is counted in jobs: a change that adds a
+    driver action or an eager checkpoint to the crawl path fails here."""
+    docs, seeds, robots, pol = _load_inputs(spark, fixture_dir)
+    sc = spark.sparkContext
+    group = "test-one-round-crawl-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        res = run_crawl(spark, docs, seeds, robots, pol, CrawlConfig(max_rounds=1))
+        rows = res.fetch_log.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    fetched = _fetch_tuples(spark.createDataFrame(rows, res.fetch_log.schema))
+    assert fetched == [t for t in _oracle_tuples(oracle_result) if t[0] == 0]
+    n_jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n_jobs <= MAX_ONE_ROUND_JOBS, n_jobs

@@ -118,10 +118,18 @@ def test_global_sequence_has_no_window(spark):
     out = global_sequence(df, ["k"], "seq", num_partitions=4)
     p = plan_of(out)
     assert "Window" not in p
-    assert "MapInPandas" in p
+    # numbering is a JVM projection: no Python node anywhere in the plan
+    for node in ("Python", "Pandas", "Arrow"):
+        assert node not in p, node
     # and it is actually dense + correctly ordered
     rows = [r["seq"] for r in out.orderBy("k").collect()]
     assert rows == list(range(1000))
+    # more partitions than rows, and an empty frame: still dense from 0
+    three = spark.createDataFrame([(3,), (1,), (2,)], "k long")
+    out = global_sequence(three, ["k"], "seq", num_partitions=8)
+    assert [(r["k"], r["seq"]) for r in out.orderBy("k").collect()] == [(1, 0), (2, 1), (3, 2)]
+    empty = spark.createDataFrame([], "k long")
+    assert global_sequence(empty, ["k"], "seq", num_partitions=4).collect() == []
 
 
 def test_dedup_exchanges_bounded(fetch_records):

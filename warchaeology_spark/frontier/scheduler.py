@@ -14,8 +14,9 @@ Round dataflow::
     links ──canonicalize (JVM) ── surt/url_hash ──> candidates
     candidates ──first-wins min_by (shuffle on surt)──> discovered
     discovered ──SeenState.novel (bloom + exact anti-join)──> novel
-    novel ──robots_gate──> allowed | denied
-    seen += novel;  pending' += allowed(depth+1)
+    novel ──robots_gate──> gated (allowed | denied)
+    scheduled by pmod(url_hash, P) ∪ gated as pid -1 ──one groupBy──> round stats
+    seen += gated;  pending' += allowed(depth+1)
     commit snapshot {pending, seen, bloom, fetch_log_r, metrics_r}
 
 Determinism contract (= the reference's --deterministic semantics,
@@ -181,6 +182,14 @@ def run_crawl(
     seen_deltas: list[DataFrame] = []  # uncommitted seen additions (store only)
     start_round = 0
 
+    def _admit(gated: DataFrame, n_rows: int) -> DataFrame:
+        """Add gated rows (denied ones too) to seen, record the seen delta
+        for the next commit, and return the allowed rows as pending rows."""
+        seen_state.add(gated, n_rows=n_rows)  # hint: auto mode-demotion
+        if store:
+            seen_deltas.append(gated.select("url_hash", "surt", "url_canon"))
+        return gated.filter(~F.col("robots_denied")).select(*PENDING_COLS)
+
     if store and config.resume and store.latest_version() is not None:
         m = store.meta()
         # apply the committed seen-state mode BEFORE restore: a crawl that
@@ -215,21 +224,17 @@ def run_crawl(
         )
         if "fetch_log" in store.manifest()["tables"]:
             fetch_log_base = store.load("fetch_log")
-        n_pending = pending.count()
+        # a store whose only commit is the seed delta has no metrics row
+        n_pending = metrics[-1]["pending_after"] if metrics else pending.count()
     else:
-        gated = gate(_init_pending(seeds))
-        gated = gated.localCheckpoint(eager=True)
+        gated = gate(_init_pending(seeds)).localCheckpoint(eager=False)
         # one action gives the gated total AND the denied count: the seed
         # add gets its delta-size hint and n_pending derives arithmetically
         c0 = gated.agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.col("robots_denied").cast("long")).alias("d"),
         ).collect()[0]
-        seen_state.add(gated, n_rows=c0["n"])  # denied seeds are seen too
-        if store:
-            seen_deltas.append(gated.select("url_hash", "surt", "url_canon"))
-        pending = gated.filter(~F.col("robots_denied")).select(*PENDING_COLS)
-        pending = pending.localCheckpoint(eager=True)
+        pending = _admit(gated, c0["n"]).localCheckpoint(eager=False)
         n_pending = c0["n"] - int(c0["d"] or 0)
     timings: list[dict] = []
 
@@ -310,8 +315,8 @@ def run_crawl(
     import time as _time
 
     # Checkpoint placement (each one measured against its alternative by
-    # an interleaved fresh-JVM A/B): every round/state localCheckpoint is
-    # lazy, so it is materialized by the first job that reads it instead
+    # an interleaved fresh-JVM A/B): every seed/round/state localCheckpoint
+    # is lazy, so it is materialized by the first job that reads it instead
     # of costing a dedicated job (BENCH/ab_lazy_round_r8.json); the
     # winner-sized `discovered` frame is checkpointed once per round
     # because novel() reads it twice (BENCH/ab_ckpt_disc_r7.json: -25%);
@@ -381,49 +386,26 @@ def run_crawl(
         gated = gate(novel).localCheckpoint(eager=False)
         tr["fetch_gate_ckpt_sec"] = round(_time.monotonic() - t0, 3)
 
-        # ONE merged driver action for everything the round must learn
-        # (VERDICT r5 next #3 — was two collects): the scheduled count +
-        # per-partition lineage AND the gated novel/denied counts, as a
-        # union of two tiny aggregates over the two checkpointed frames.
+        # ONE driver action for everything the round must learn: scheduled
+        # rows keyed by their url_hash partition (count + per-partition
+        # lineage) and gated rows under pid -1 (novel count, denied sum),
+        # in one aggregate over the two checkpointed frames.
         t0 = _time.monotonic()
-        pid_col = (
-            F.pmod(F.col("url_hash"), F.lit(config.num_partitions))
-            .cast("int")
-            .alias("pid")
-        )
-        sched_stats = scheduled.groupBy(pid_col).agg(
-            F.count(F.lit(1)).alias("value")
-        ).select(F.lit("part").alias("kind"), "pid", "value")
-        gated_stats = (
-            gated.agg(
-                F.count(F.lit(1)).alias("novel"),
-                F.sum(F.col("robots_denied").cast("long")).alias("denied"),
+        stats = (
+            scheduled.select(
+                F.pmod("url_hash", F.lit(config.num_partitions)).cast("int").alias("pid"),
+                F.lit(False).alias("robots_denied"),
             )
-            .select(
-                F.explode(
-                    F.array(
-                        F.struct(
-                            F.lit("novel").alias("kind"),
-                            F.lit(-1).alias("pid"),
-                            F.col("novel").cast("long").alias("value"),
-                        ),
-                        F.struct(
-                            F.lit("denied").alias("kind"),
-                            F.lit(-1).alias("pid"),
-                            F.coalesce(F.col("denied"), F.lit(0))
-                            .cast("long")
-                            .alias("value"),
-                        ),
-                    )
-                ).alias("s")
-            )
-            .select("s.*")
+            .unionByName(gated.select(F.lit(-1).alias("pid"), "robots_denied"))
+            .groupBy("pid")
+            .agg(F.count(F.lit(1)).alias("n"), F.sum(F.col("robots_denied").cast("long")).alias("d"))
+            .collect()
         )
-        stats = sched_stats.unionByName(gated_stats).collect()
-        part_rows = [x for x in stats if x["kind"] == "part"]
-        n_sched = sum(x["value"] for x in part_rows)
-        n_novel = next(x["value"] for x in stats if x["kind"] == "novel")
-        n_denied = int(next(x["value"] for x in stats if x["kind"] == "denied"))
+        per_part = dict(sorted((x["pid"], x["n"]) for x in stats if x["pid"] >= 0))
+        n_sched = sum(per_part.values())
+        # an empty gated frame has no pid -1 row: novel = denied = 0
+        g = next((x for x in stats if x["pid"] < 0), {"n": 0, "d": 0})
+        n_novel, n_denied = g["n"], int(g["d"] or 0)
         tr["stats_collect_sec"] = round(_time.monotonic() - t0, 3)
         if n_sched == 0:
             # nothing scheduled -> the (empty) round changed no state; a
@@ -435,10 +417,7 @@ def run_crawl(
         pending = pending_next
 
         t0 = _time.monotonic()
-        seen_state.add(gated, n_rows=n_novel)  # hint: auto mode-demotion
-        if store:
-            seen_deltas.append(gated.select("url_hash", "surt", "url_canon"))
-        allowed = gated.filter(~F.col("robots_denied")).select(*PENDING_COLS)
+        allowed = _admit(gated, n_novel)
         tr["seen_add_sec"] = round(_time.monotonic() - t0, 3)
         # carry-over state: the lineage cut still happens, but
         # materialization rides the next round's first job instead of
@@ -469,7 +448,7 @@ def run_crawl(
             }
         )
         partition_metrics.append(
-            {"round": r, "scheduled_per_partition": {int(x["pid"]): x["value"] for x in part_rows}}
+            {"round": r, "scheduled_per_partition": per_part}
         )
 
         if store:
