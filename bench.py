@@ -209,10 +209,11 @@ def run_kernel(spark, n_urls: int) -> dict:
 
     # seen set: half the key space pre-seen (steady-state crawl shape).
     # SPARK_GRAFT_KERNEL_BLOOM picks the serving mode: broadcast (default,
-    # one broadcast of the numpy shards + pandas-UDF test), sharded
-    # (cogroup), off (exact anti-join only).
+    # one broadcast of the numpy shards + pandas-UDF test) or sharded
+    # (cogroup). The bloom itself is on only from SeenState.bloom_min_rows
+    # pre-seen rows (4M URLs and up); below that bloom_mode reads "off".
     bloom_mode = os.environ.get("SPARK_GRAFT_KERNEL_BLOOM", "broadcast")
-    bloom_modes = ("broadcast", "sharded", "off")
+    bloom_modes = ("broadcast", "sharded")
     if bloom_mode not in bloom_modes:
         raise ValueError(
             f"SPARK_GRAFT_KERNEL_BLOOM={bloom_mode!r}: valid modes are "
@@ -222,18 +223,9 @@ def run_kernel(spark, n_urls: int) -> dict:
         spark,
         num_partitions=cpus,
         expected_total=n_urls,
-        use_bloom=bloom_mode != "off",
         # broadcast: the driver budget admits the pre-seen half (one big
         # delta); sharded: a zero budget makes the state start sharded
         broadcast_max_delta=0 if bloom_mode == "sharded" else n_urls,
-        # Evaluate the bloom-tested frame once (cached) instead of twice
-        # (survivors build + probe scan) — r7 A/B on the bench instrument,
-        # same session back-to-back legs:
-        #   1x4-core executors: 123.7 -> 107.1 s best-of-3 (-13%)
-        #   4x4-core executors: 39.4 -> 29.9 s best-of-3 (-24%, profiler)
-        # The cache is one round's candidates (never |seen|), so the
-        # materialization stays round-sized at any crawl scale.
-        fpp_checkpoint_tested=True,
     )
     # NOTE (measured negative result, round 3): caching seen
     # pre-partitioned + pre-sorted on the anti-join keys (repartition +
@@ -260,6 +252,8 @@ def run_kernel(spark, n_urls: int) -> dict:
         seen_state.bloom = seen_state.bloom.localCheckpoint(eager=True)
     bloom_build_sec = time.monotonic() - tb0
     seen_state.seen = pre
+    if not seen_state.bloom_on:
+        bloom_mode = "off"
 
     pol = spark.range(n_hosts).select(
         F.format_string("host%d.example.com", F.col("id")).alias("host"),

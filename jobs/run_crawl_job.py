@@ -49,7 +49,6 @@ def main(argv=None):
     ap.add_argument("--salts", type=int, default=8)
     ap.add_argument("--partitions", type=int, default=64)
     ap.add_argument("--expected-urls", type=int, default=10_000_000)
-    ap.add_argument("--no-bloom", action="store_true")
     args = ap.parse_args(argv)
 
     from pyspark.sql import SparkSession
@@ -84,7 +83,6 @@ def main(argv=None):
             max_rounds=args.rounds,
             default_budget=args.budget,
             n_salts=args.salts,
-            use_bloom=not args.no_bloom,
             num_partitions=args.partitions,
             expected_total=args.expected_urls,
             store_root=args.store,

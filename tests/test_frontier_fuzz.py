@@ -1,9 +1,11 @@
 """Property-based frontier parity (VERDICT r7 next #3): hypothesis-drawn
 crawl instances — random link graphs, robots prefix rules, politeness
 budgets and mangled seed orders — each run on a drawn seen-set path
-(broadcast bloom, cogroup-sharded bloom, or no bloom), asserting
-run_crawl == the sequential oracle (frontier/oracle.py) on every draw,
-plus crawl-contract invariants. Pattern follows tests/test_warc_fuzz.py.
+(below the bloom threshold, broadcast bloom or cogroup-sharded bloom; the
+bloom paths draw a small threshold, so some crawls turn the bloom on
+between rounds), asserting run_crawl == the sequential oracle
+(frontier/oracle.py) on every draw, plus crawl-contract invariants.
+Pattern follows tests/test_warc_fuzz.py.
 
 Properties asserted per drawn instance:
   1. fetch-log parity: tuple-for-tuple (round, seq, url_canon, surt,
@@ -124,14 +126,15 @@ def fuzz_spark(spark):
 
 @given(
     inst=crawl_instance(),
-    seen_path=st.sampled_from(["broadcast", "sharded", "off"]),
+    seen_path=st.sampled_from(["below", "broadcast", "sharded"]),
+    bloom_min_rows=st.integers(0, 24),
 )
 @settings(
     max_examples=6,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
-def test_fuzzed_crawl_matches_sequential_oracle(fuzz_spark, inst, seen_path):
+def test_fuzzed_crawl_matches_sequential_oracle(fuzz_spark, inst, seen_path, bloom_min_rows):
     spark = fuzz_spark
     docs, seeds, robots, politeness = inst
     docs_df = spark.createDataFrame(docs, DOCS_SCHEMA)
@@ -142,13 +145,14 @@ def test_fuzzed_crawl_matches_sequential_oracle(fuzz_spark, inst, seen_path):
     # the serving mode is derived from the bloom size; a zero driver
     # budget makes the state start cogroup-sharded
     seen_cls = SeenState
-    if seen_path == "sharded":
-        seen_cls = partial(SeenState, broadcast_max_delta=0)
+    if seen_path != "below":
+        kw = {"broadcast_max_delta": 0} if seen_path == "sharded" else {}
+        seen_cls = partial(SeenState, bloom_min_rows=bloom_min_rows, **kw)
     with mock.patch.object(scheduler, "SeenState", seen_cls):
         res = run_crawl(
             spark, docs_df, seeds_df, robots_df, pol_df,
             CrawlConfig(max_rounds=3, num_partitions=2, n_salts=2,
-                        expected_total=4096, use_bloom=seen_path != "off"),
+                        expected_total=4096),
         )
     oracle = simulate_crawl(docs, seeds, robots, politeness, max_rounds=3)
 

@@ -1,8 +1,9 @@
 """Knob census: the library reads the process environment only in
 ``session.py``, whose reads are deployment settings (cores, memory,
 master, JVM flags). Any other read would be a tuning knob that switches a
-code path behind the tests' back. Pure Python: parses the package with
-``ast``, starts no Spark session."""
+code path behind the tests' back. The frontier's ``CrawlConfig`` and
+``SeenState`` fields are pinned by name. Pure Python: parses the package
+with ``ast`` and imports two modules; starts no Spark session."""
 
 from __future__ import annotations
 
@@ -35,3 +36,21 @@ def test_only_session_reads_the_environment():
         if (lines := _env_reads(ast.parse(f.read_text(), str(f))))
     }
     assert set(reads) == {"session.py"}, reads
+
+
+def test_frontier_config_fields_are_pinned():
+    """Every CrawlConfig and SeenState field is a knob that multiplies the
+    parity matrix: adding one has to edit this census."""
+    from dataclasses import fields
+
+    from warchaeology_spark.frontier.scheduler import CrawlConfig
+    from warchaeology_spark.frontier.seen import SeenState
+
+    assert [f.name for f in fields(CrawlConfig)] == [
+        "max_rounds", "default_budget", "n_salts", "num_partitions",
+        "expected_total", "store_root", "resume",
+    ]
+    assert [f.name for f in fields(SeenState)] == [
+        "spark", "num_partitions", "expected_total", "fpp",
+        "broadcast_max_delta", "bloom_min_rows",
+    ]

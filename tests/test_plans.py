@@ -169,7 +169,7 @@ def test_slim_novel_keeps_wide_columns_out_of_exchanges(spark):
     from warchaeology_spark.frontier.seen import SeenState
 
     st = SeenState(spark, num_partitions=4, expected_total=10_000,
-                   use_bloom=True, slim_join_min_rows=0)
+                   bloom_min_rows=0)
     seen = spark.range(0, 1000, 2).select(
         F.col("id").alias("url_hash"),
         F.concat(F.lit("s"), F.col("id")).alias("surt"),

@@ -1,6 +1,8 @@
-"""SeenState: one live broadcast per change of the driver shards, the
-serving mode derived from the bloom size, demotion to the cogroup-sharded
-mode, and exact membership in every mode."""
+"""SeenState: the bloom turned on by the seen-set size, one live
+broadcast per change of the driver shards, the serving mode derived from
+the bloom size, demotion to the cogroup-sharded mode, and exact
+membership in every mode. The bloom needs ``bloom_min_rows=0`` to be on
+at these sizes."""
 
 from __future__ import annotations
 
@@ -20,7 +22,7 @@ def test_broadcast_bytes_track_delta_not_total(spark):
     """Broadcast bytes follow the delta: a novel() after an add() ships
     the live driver shards once, a novel() with no add() in between
     ships nothing and reuses the same broadcast; membership stays exact."""
-    st = SeenState(spark, num_partitions=8, expected_total=80_000, use_bloom=True)
+    st = SeenState(spark, num_partitions=8, expected_total=80_000, bloom_min_rows=0)
     shard_bytes = st.m_bits // 8
 
     # round 1: keys spread over ALL 8 shards
@@ -61,7 +63,7 @@ def test_broadcast_chain_compacts(spark, monkeypatch):
         return real_unpersist(self, blocking)
 
     monkeypatch.setattr(Broadcast, "unpersist", recording_unpersist)
-    st = SeenState(spark, num_partitions=4, expected_total=40_000, use_bloom=True)
+    st = SeenState(spark, num_partitions=4, expected_total=40_000, bloom_min_rows=0)
     shard_bytes = st.m_bits // 8
     built, added = [], []
     for r in range(4):
@@ -84,12 +86,12 @@ def test_broadcast_chain_compacts(spark, monkeypatch):
 
 
 def test_restore_seeds_driver_shards(spark):
-    st = SeenState(spark, num_partitions=4, expected_total=40_000, use_bloom=True)
+    st = SeenState(spark, num_partitions=4, expected_total=40_000, bloom_min_rows=0)
     st.add(_urls(spark, list(range(20))))
     snapshot_bloom = st.bloom  # property: built from driver shards
     snapshot_seen = st.seen.localCheckpoint(eager=True)
 
-    st2 = SeenState(spark, num_partitions=4, expected_total=40_000, use_bloom=True)
+    st2 = SeenState(spark, num_partitions=4, expected_total=40_000, bloom_min_rows=0)
     st2.restore(snapshot_seen, snapshot_bloom)
     got = {r["url_hash"] for r in st2.novel(_urls(spark, [5, 15, 777])).collect()}
     assert got == {777}
@@ -101,7 +103,7 @@ def test_large_delta_auto_demotes_to_sharded(spark, monkeypatch):
     # driver, and membership must stay exact across the migration
     from pyspark.sql import DataFrame
 
-    st = SeenState(spark, num_partitions=4, expected_total=40_000, use_bloom=True)
+    st = SeenState(spark, num_partitions=4, expected_total=40_000, bloom_min_rows=0)
     st.broadcast_max_delta = 50
     st.add(_urls(spark, list(range(10))))  # small delta: broadcast path
     assert st.broadcast_bloom and st._shards
@@ -129,7 +131,7 @@ def test_large_delta_auto_demotes_to_sharded(spark, monkeypatch):
 def test_add_without_hint_counts_before_collecting(spark):
     # no n_rows hint: broadcast mode must still demote on a large delta
     # (it counts first — the count is allowed, a row collect is not)
-    st = SeenState(spark, num_partitions=4, expected_total=40_000, use_bloom=True)
+    st = SeenState(spark, num_partitions=4, expected_total=40_000, bloom_min_rows=0)
     st.broadcast_max_delta = 5
     st.add(_urls(spark, list(range(20))))  # 20 > 5, no hint
     assert not st.broadcast_bloom
@@ -138,12 +140,12 @@ def test_add_without_hint_counts_before_collecting(spark):
 
 
 def test_add_without_hint_counts_rows_in_every_mode(spark):
-    # the hint-less row count feeds seen_rows_approx (the novel() join
-    # shape) the same way whichever serving mode the state is in
+    # the hint-less row count feeds seen_rows_approx (the bloom rule) the
+    # same way whichever serving mode the state is in
     approx = {}
     for max_delta in (10_000_000, 0):  # derived start: broadcast, sharded
         st = SeenState(spark, num_partitions=4, expected_total=40_000,
-                       broadcast_max_delta=max_delta)
+                       broadcast_max_delta=max_delta, bloom_min_rows=0)
         st.add(_urls(spark, list(range(30))))
         approx[st.is_sharded] = st.seen_rows_approx
     assert approx == {False: 30, True: 30}
@@ -170,27 +172,58 @@ def test_start_mode_derived_from_bloom_size():
 
 
 def test_slim_and_branchy_novel_shapes_agree(spark):
-    """novel() picks its join shape on seen_rows_approx; both shapes must
-    return identical rows (incl. rescuing bloom false positives and keeping
-    within-round duplicate candidates)."""
+    """novel() is the exact anti-join below bloom_min_rows and the bloom +
+    slim rescue join from it on; both shapes, in both serving modes, must
+    return identical rows (incl. rescuing bloom false positives and
+    keeping within-round duplicate candidates)."""
     seen_rows = list(range(0, 100, 2))
     cand_rows = list(range(50, 150)) + [51, 53]  # overlaps + dup candidates
 
-    def run(slim_min, fpp_ckpt=False):
+    def run(bloom_min, **kw):
         st = SeenState(spark, num_partitions=4, expected_total=1000,
-                       use_bloom=True, slim_join_min_rows=slim_min,
-                       fpp_checkpoint_tested=fpp_ckpt)
+                       bloom_min_rows=bloom_min, **kw)
         st.add(_urls(spark, seen_rows))
         out = st.novel(_urls(spark, cand_rows))
         assert out.columns == ["url_hash", "surt", "url_canon"]
-        return sorted((r["url_hash"], r["surt"]) for r in out.collect())
+        return st.bloom_on, sorted((r["url_hash"], r["surt"]) for r in out.collect())
 
-    branchy = run(10**9)  # threshold never reached -> branchy shape
-    slim = run(0)         # always slim shape
-    # slim + checkpointed tested frame (one bloom evaluation) — the
-    # kernel's fpp_checkpoint_tested setting must not change rows
-    slim_ckpt = run(0, fpp_ckpt=True)
+    anti_join = run(10**9)  # threshold never reached -> exact anti-join
+    broadcast = run(0)
+    sharded = run(0, broadcast_max_delta=0)
     expect = sorted(
         (h, f"surt{h}") for h in cand_rows if h not in set(seen_rows)
     )
-    assert branchy == slim == slim_ckpt == expect
+    assert anti_join == (False, expect)
+    assert broadcast == sharded == (True, expect)
+
+
+def _bits(st):
+    return {r["pid"]: bytes(r["bitset"]) for r in st.bloom.collect()}
+
+
+def test_bits_built_at_crossing_equal_incremental_bits(spark):
+    """The add that crosses bloom_min_rows builds the bits from the whole
+    seen table; they equal, byte for byte, the bits of a state whose bloom
+    was on from the first add, and every seen url_hash tests positive."""
+    import numpy as np
+
+    from warchaeology_spark.frontier.seen import _test_bits
+
+    deltas = [list(range(0, 30)), list(range(100, 140)), list(range(500, 520))]
+    for kw in ({}, {"broadcast_max_delta": 0}):  # broadcast, sharded
+        states = {}
+        for bloom_min in (0, 50):  # on from the start; crosses at add #2
+            st = SeenState(spark, num_partitions=4, expected_total=4000,
+                           bloom_min_rows=bloom_min, **kw)
+            for i, d in enumerate(deltas):
+                st.add(_urls(spark, d), n_rows=len(d))
+                assert st.bloom_on == (bloom_min == 0 or i >= 1)
+            states[bloom_min] = st
+        assert states[50].is_sharded == bool(kw)
+        assert _bits(states[0]) == _bits(states[50])
+        hashes = np.array([h for d in deltas for h in d], dtype=np.int64)
+        for pid, blob in _bits(states[50]).items():
+            sel = hashes[hashes % 4 == pid]
+            bits = np.frombuffer(blob, dtype=np.uint8)
+            assert _test_bits(bits, sel, states[50].m_bits, states[50].k).all()
+

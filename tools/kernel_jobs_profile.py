@@ -57,8 +57,8 @@ def main() -> None:
     )
     urls = spark.range(n_urls, numPartitions=cpus * 2).select(raw.alias("raw_url"))
     seen = SeenState(
-        spark, num_partitions=cpus, expected_total=n_urls, use_bloom=True,
-        broadcast_max_delta=n_urls, fpp_checkpoint_tested=True,  # as bench.py
+        spark, num_partitions=cpus, expected_total=n_urls,
+        broadcast_max_delta=n_urls,  # as bench.py
     )
     pre = spark.range(0, n_urls, 2, numPartitions=cpus).select(
         F.format_string(

@@ -8,7 +8,7 @@ attributes scaling per STAGE with much shorter timed units:
 
   1a canonicalize+materialize   (the suspected residual: regex+alloc)
   1b derive surt/host/hash      (byte-scan intrinsics from clean canon)
-  2  bloom + exact anti-join    (pandas-UDF bloom + slim join)
+  2  seen-set novel()           (bloom + slim join from 2M seen rows)
   3  politeness salted top-k    (two-phase window)
 
 Each config runs in a fresh JVM; inside it the whole pipeline warms up
@@ -56,7 +56,7 @@ def child(cpus: int, n_urls: int, passes: int) -> None:
         .select(raw.alias("raw_url"))
         .localCheckpoint(eager=True)
     )
-    seen = SeenState(spark, num_partitions=cpus, expected_total=n_urls, use_bloom=True)
+    seen = SeenState(spark, num_partitions=cpus, expected_total=n_urls)
     pre = (
         spark.range(0, n_urls, 2, numPartitions=cpus)
         .select(

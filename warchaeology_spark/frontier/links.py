@@ -30,20 +30,25 @@ TRAIL_STRIP_RE = r"[.,;)'\"]+$"
 
 
 def extract_outlinks(docs: DataFrame) -> DataFrame:
-    """-> (src_doc_id, src_url, span_offset, link_idx, raw_url).
+    """-> (src_doc_id, src_url, span_offset, link_idx, raw_url), plus any
+    further columns of ``docs`` (besides doc_id, url, spans) carried onto
+    each link row.
 
     One row per extracted link occurrence. Catalyst prunes ``spans`` down
     to the struct fields used; the explode is pipelined inside the scan
     stage (no shuffle).
     """
+    carry = [c for c in docs.columns if c not in ("doc_id", "url", "spans")]
     sp = docs.select(
         F.col("doc_id").alias("src_doc_id"),
         F.col("url").alias("src_url"),
+        *carry,
         F.explode("spans").alias("span"),
     )
     links_per_span = sp.select(
         "src_doc_id",
         "src_url",
+        *carry,
         F.col("span.offset").alias("span_offset"),
         F.when(
             F.col("span.kind") == "media",
@@ -56,6 +61,7 @@ def extract_outlinks(docs: DataFrame) -> DataFrame:
     return links_per_span.select(
         "src_doc_id",
         "src_url",
+        *carry,
         "span_offset",
         F.posexplode("links").alias("link_idx", "raw_url"),
     ).withColumn("raw_url", F.regexp_replace("raw_url", TRAIL_STRIP_RE, ""))

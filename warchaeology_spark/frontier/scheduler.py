@@ -3,8 +3,9 @@
 Iterative batch rounds over snapshot state (not Structured Streaming): at
 10^10-URL scale the seen/pending state must live in partitioned tables,
 not in a streaming state store. Each round is one declarative DataFrame
-plan; Catalyst/AQE pick physical strategies, and the only Python on the
-data path is the vectorized bloom test (seen.py).
+plan; Catalyst/AQE pick physical strategies. Below the seen set's bloom
+threshold no Python touches the data; above it the vectorized bloom test
+(seen.py) is the only Python on the data path.
 
 Round dataflow::
 
@@ -13,7 +14,7 @@ Round dataflow::
     scheduled ⋈ documents(url) ──extract_outlinks──> raw links
     links ──canonicalize (JVM) ── surt/url_hash ──> candidates
     candidates ──first-wins min_by (shuffle on surt)──> discovered
-    discovered ──SeenState.novel (bloom + exact anti-join)──> novel
+    discovered ──SeenState.novel (exact anti-join, bloom-first at scale)──> novel
     novel ──robots_gate──> gated (allowed | denied)
     scheduled by pmod(url_hash, P) ∪ gated as pid -1 ──one groupBy──> round stats
     seen += gated;  pending' += allowed(depth+1)
@@ -32,8 +33,8 @@ Scale notes (100 TB / 1000-executor design points):
   hosts per round) -> broadcast; documents stays put. On a real cluster
   documents is Iceberg-bucketed by xxhash64(url) so even a huge scheduled
   side co-locates.
-- seen anti-join: hash-partitioned on url_hash; the bloom pre-filter
-  removes the already-seen majority before the shuffle.
+- seen anti-join: hash-partitioned on url_hash; from 2M seen rows the
+  bloom pre-filter removes the already-seen majority before the shuffle.
 - heavy-host skew: salted two-phase top-k (politeness.py) + AQE.
 - lineage: every round ends in a parquet-backed snapshot (checkpoint.py),
   so plan depth is O(1) in rounds and a kill resumes from the last commit.
@@ -61,7 +62,6 @@ class CrawlConfig:
     max_rounds: int = 10
     default_budget: int = 2
     n_salts: int = 8
-    use_bloom: bool = True
     num_partitions: int = 8
     expected_total: int = 100_000
     # enables checkpoint/resume: every round commits a snapshot, so a kill
@@ -150,7 +150,6 @@ def run_crawl(
         spark,
         num_partitions=config.num_partitions,
         expected_total=config.expected_total,
-        use_bloom=config.use_bloom,
     )
     # robots input is either the pre-parsed (host, path_pref, allow)
     # prefix table (fixture/oracle model, any-disallow-prefix semantics)
@@ -217,9 +216,10 @@ def run_crawl(
             seen_state.seen_rows_approx = int(committed_rows)
         seen_state.restore(
             store.load("seen"),
-            store.load("bloom") if config.use_bloom else None,
-            # with an exact committed count the join-shape choice is
-            # informed; only assume-large when resuming a pre-r4 manifest
+            store.load("bloom") if store.has_table("bloom") else None,
+            # the committed count turns the bloom on or off; only a pre-r4
+            # manifest has none (assume large). A store without a bloom
+            # table gets its bits built from seen.
             assume_large=committed_rows is None,
         )
         if "fetch_log" in store.manifest()["tables"]:
@@ -263,12 +263,10 @@ def run_crawl(
         # the live frontier; Iceberg swap: merge-on-read). bloom bitsets
         # mutate in place -> full rewrite (12 GB at the 10^10 design
         # point vs ~1 TB for seen — the seen/fetch_log deltas are the
-        # write-amplification fix that matters).
-        tables = {"pending": pending}
-        if config.use_bloom:
-            tables["bloom"] = seen_state.bloom
+        # write-amplification fix that matters). Below the bloom
+        # threshold the bloom table is all zeros.
         store.commit(
-            tables,
+            {"pending": pending, "bloom": seen_state.bloom},
             {
                 "next_round": next_round,
                 "metrics": metrics,
@@ -278,8 +276,8 @@ def run_crawl(
                 # broadcast mode (restore would collect the full bitset
                 # set — ~12 GB at the 10^10 design point — to the driver
                 # and re-enter the mode the demotion guard escaped).
-                # The exact row count lets resume keep the right
-                # novel() join shape without an extra action.
+                # The exact row count lets resume apply the bloom rule
+                # without an extra action.
                 # (ADVICE r3 #4.)
                 "seen_state": {
                     "broadcast_bloom": seen_state.broadcast_bloom,
@@ -291,22 +289,13 @@ def run_crawl(
         seen_deltas = []
         fetch_logs = []
         # re-read to truncate lineage at the snapshot boundary. The
-        # bloom is NOT restored in broadcast mode: the driver shards
-        # are already authoritative and have no lineage to truncate —
-        # re-seeding them here would collect the full bitset set back
-        # to the driver every round. Shards are seeded from the store
-        # only on an actual resume.
+        # broadcast mode's driver shards are authoritative and have no
+        # lineage to truncate; re-seeding them would collect the full
+        # bitset set back to the driver every round.
         pending = store.load("pending")
-        reload_bloom = seen_state.is_sharded
-        # assume_large=False: this is the in-loop lineage-truncation
-        # restore — seen_rows_approx is already exact via add() hints;
-        # inflating it would lock toy crawls onto the slim-join shape's
-        # fixed per-round latency (ADVICE r3 #2)
-        seen_state.restore(
-            store.load("seen"),
-            store.load("bloom") if reload_bloom else None,
-            assume_large=False,
-        )
+        seen_state.seen = store.load("seen")
+        if seen_state.is_sharded:
+            seen_state.bloom = store.load("bloom")
         # a flush with zero logged fetches (fresh crawl whose first round
         # schedules nothing) commits no fetch_log table
         if store.has_table("fetch_log"):
@@ -339,17 +328,18 @@ def run_crawl(
         )
 
         # fetch: exact canonical-URL match against the document table.
-        # scheduled is tiny vs documents -> broadcast the scheduled side.
+        # scheduled is tiny vs documents -> broadcast the scheduled side,
+        # ONCE: the fetched rows carry their depth onto their link rows.
+        # A second broadcast (for src_depth) was a second stage reading the
+        # lazy `scheduled` checkpoint concurrently with the first, and the
+        # two raced to store its block.
         fetched_docs = documents.join(
-            F.broadcast(scheduled.select(F.col("url_canon").alias("url"))), "url"
+            F.broadcast(scheduled.select(
+                F.col("url_canon").alias("url"), F.col("depth").alias("src_depth")
+            )),
+            "url",
         )
-        links = extract_outlinks(fetched_docs.select("doc_id", "url", "spans"))
-        links = links.join(
-            F.broadcast(
-                scheduled.select(F.col("url_canon").alias("src_url"), F.col("depth").alias("src_depth"))
-            ),
-            "src_url",
-        )
+        links = extract_outlinks(fetched_docs.select("doc_id", "url", "spans", "src_depth"))
         # Two-step canonicalization around the dedup shuffle: the map side
         # computes ONLY the surt grouping key (one parse tree + its filter
         # copy — Catalyst inlines column expressions into every consumer,

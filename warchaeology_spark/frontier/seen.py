@@ -19,6 +19,12 @@ driver-side bloom: ~12 GB at 1% fpp) cannot work; the Spark-native design:
   steady-state crawl where most discovered links are already seen, the
   bloom removes the dominant shuffle.
 
+One rule picks the path: the bloom is on from ``bloom_min_rows`` seen
+rows. Below it ``add()`` only unions and counts and ``novel()`` is the
+exact anti-join on ``surt``. The add that crosses the threshold inserts
+the whole ``seen`` table, later adds their delta: the bits depend only on
+the set of seen hashes, so the crossing cannot change a result.
+
 The bloom is served in one of two modes, derived from its size
 (``_fits_broadcast``): broadcast (driver-held numpy shards, one broadcast
 per change) when the full bitset set fits the per-round driver budget,
@@ -89,7 +95,6 @@ class SeenState:
     num_partitions: int = 8
     expected_total: int = 100_000
     fpp: float = 0.01
-    use_bloom: bool = True
     # Per-round driver budget of the broadcast serving mode, in delta rows
     # (8 B of url_hash each). In broadcast mode the bitsets are
     # AUTHORITATIVE ON THE DRIVER as numpy shards: add() pulls only the
@@ -98,22 +103,16 @@ class SeenState:
     # scalar pandas UDF over ONLY the hash column. The mode is derived,
     # not configured: a state whose full bitset set exceeds 8 B x this
     # budget starts cogroup-sharded (bits set on the executors, each task
-    # sees only its shard), and a broadcast-mode delta above it demotes
+    # sees only its shard), and a broadcast-mode insert above it demotes
     # the state to sharded before any row data reaches the driver
     # (VERDICT r2 #2: ~800 MB single-threaded at 10^8 rows/round).
     broadcast_max_delta: int = 10_000_000
-    # below this many (approx) seen rows novel() keeps the simple branchy
-    # anti-join (AQE broadcasts it whole); above it the shuffle-slim
-    # key-projection + broadcast-rescue shape wins (2x at 8M+ keys)
-    slim_join_min_rows: int = 2_000_000
-    # slim-shape lever: localCheckpoint the bloom-tested frame before its
-    # two consumers (survivor anti-join + final probe) so the bloom UDF and
-    # the candidate lineage evaluate ONCE instead of twice, at the price of
-    # materializing `tested`. On for bench.py's exchange-free kernel
-    # (BENCH/ab_fpp_ckpt_r7.json), off for the crawl, whose candidates
-    # restart from the dedup shuffle's map outputs
-    # (BENCH/ab_fpp_frontier_r7.json: +13% slower there).
-    fpp_checkpoint_tested: bool = False
+    # the bloom is on from this many (approx) seen rows. The exact
+    # anti-join alone won at 0.5M and at 2M (BENCH/ab_bloom_kernel.json),
+    # so no bloom crossover is known: the threshold is the slim-join
+    # crossover (2x over the branchy bloom join at 8M+ keys), and the
+    # bloom stays for the 10^10 design point
+    bloom_min_rows: int = 2_000_000
 
     def __post_init__(self):
         self.m_bits, self.k = _bloom_params(
@@ -125,8 +124,8 @@ class SeenState:
         self.seen: DataFrame = self.spark.createDataFrame(
             [], "url_hash long, surt string, url_canon string"
         )
-        # approximate cumulative seen rows (sum of add() deltas) — picks
-        # the novel() join shape; order-of-magnitude is enough
+        # approximate cumulative seen rows (sum of add() deltas) — turns
+        # the bloom on; order-of-magnitude is enough
         self.seen_rows_approx: int = 0
         # broadcast-mode state (driver-authoritative): the shards, the one
         # live broadcast of them, and whether add()/restore() changed bits
@@ -145,7 +144,7 @@ class SeenState:
     # -- bloom as a DataFrame (checkpoint surface) ---------------------------
     @property
     def bloom(self) -> DataFrame:
-        """The bloom as a (pid, bitset) DataFrame.
+        """The bloom as a (pid, bitset) DataFrame, all zeros while off.
 
         Sharded mode: the live distributed table. Broadcast mode: built
         from the driver shards on demand (checkpoint/inspection only — the
@@ -166,14 +165,11 @@ class SeenState:
 
     @bloom.setter
     def bloom(self, df: DataFrame) -> None:
-        if self.broadcast_bloom:
-            self._seed_shards_from(df)
-        else:
+        """Broadcast mode loads the driver shards from ``df`` (restore
+        path — one full collect at resume, never per round)."""
+        if not self.broadcast_bloom:
             self._bloom_df = df
-
-    def _seed_shards_from(self, df: DataFrame) -> None:
-        """Load driver shards from a (pid, bitset) DataFrame (restore path —
-        one full collect at resume, never per round)."""
+            return
         self._shards = {}
         for r in df.collect():
             bits = np.frombuffer(bytes(r["bitset"]), dtype=np.uint8).copy()
@@ -183,12 +179,18 @@ class SeenState:
 
     # -- helpers ------------------------------------------------------------
     @property
+    def bloom_on(self) -> bool:
+        """The one path rule: from ``bloom_min_rows`` seen rows on, the
+        bloom holds every seen hash and ``novel()`` tests it first."""
+        return self.seen_rows_approx >= self.bloom_min_rows
+
+    @property
     def is_sharded(self) -> bool:
-        """True when the bloom lives cluster-side as a (pid, bitset) table
-        (derived from the bitset size at construction, or arrived at by
-        auto-demotion from the broadcast mode) — the caller must then
-        checkpoint ``bloom`` per round."""
-        return self.use_bloom and not self.broadcast_bloom
+        """True when the bloom is on and lives cluster-side as a (pid,
+        bitset) table (derived from the bitset size at construction, or
+        arrived at by auto-demotion from the broadcast mode) — the caller
+        must then checkpoint ``bloom`` per round."""
+        return self.bloom_on and not self.broadcast_bloom
 
     def _pid(self, col):
         return F.pmod(col, F.lit(self.num_partitions)).cast("int")
@@ -214,16 +216,24 @@ class SeenState:
 
         ``n_rows``: the delta's row count when the caller already knows it
         (the round loop does — no extra action); without it the delta is
-        counted first (one cheap job). In broadcast mode a delta above
-        ``broadcast_max_delta`` triggers self-demotion to sharded mode
-        BEFORE any row data is pulled to the driver."""
+        counted first (one cheap job). Below ``bloom_min_rows`` that is
+        all; the add that crosses it inserts the whole seen table into the
+        bloom, later adds their delta."""
         rows = urls.select("url_hash", "surt", "url_canon")
         self.seen = self.seen.unionByName(rows)
         if n_rows is None:
             n_rows = rows.count()
+        was_on = self.bloom_on
         self.seen_rows_approx += n_rows
-        if not self.use_bloom:
-            return
+        if was_on:
+            self._insert(rows, n_rows)
+        elif self.bloom_on:
+            self._insert(self.seen, self.seen_rows_approx)
+
+    def _insert(self, rows: DataFrame, n_rows: int) -> None:
+        """Set the bits of ``rows``' url_hash. In broadcast mode an insert
+        above ``broadcast_max_delta`` rows demotes the state to sharded
+        mode BEFORE any row data is pulled to the driver."""
         m_bits, k = self.m_bits, self.k
         if self.broadcast_bloom and n_rows > self.broadcast_max_delta:
             self._switch_to_sharded()  # falls through to cogroup path
@@ -263,8 +273,9 @@ class SeenState:
     def novel(self, cands: DataFrame) -> DataFrame:
         """Rows of ``cands`` (must carry url_hash, surt) NOT in the seen set.
 
-        Bloom miss -> definitely new (no join). Bloom hit -> exact
-        anti-join resolves false positives. Without bloom: plain anti-join.
+        Bloom off: the exact anti-join on surt. Bloom on: bloom miss ->
+        definitely new (no join); bloom hit -> the exact anti-join
+        resolves false positives (``_fpp_filter``).
 
         Snapshot contract: the result captures the seen set AS OF THIS
         CALL (the broadcast is built here; the exact table is the
@@ -273,8 +284,9 @@ class SeenState:
         the gated result and runs its stats action on it between the two,
         which pins the snapshot.
         """
-        if not self.use_bloom:
-            return cands.join(self.seen.select("surt"), "surt", "left_anti")
+        if not self.bloom_on:
+            seen = self.seen.select("surt")
+            return cands.join(seen, "surt", "left_anti").select(cands.columns)
         if self.broadcast_bloom:
             return self._novel_broadcast(cands)
 
@@ -301,7 +313,7 @@ class SeenState:
 
         ``tested`` = candidates + a ``maybe_seen`` bloom verdict. Novel =
         bloom-miss rows, PLUS bloom-hit rows that are NOT actually in the
-        seen table (false positives). Two structural choices for scale:
+        seen table (false positives). Three structural choices for scale:
 
         1. The exact anti-join that finds the false positives runs on a
            slim (url_hash, surt) projection — shuffling full candidate
@@ -316,19 +328,13 @@ class SeenState:
            the branchy shape re-runs the candidate lineage (parse +
            bloom UDF) once per branch; this shape runs the full-width
            lineage once.
+        3. ``tested`` is checkpointed before its two consumers, so the
+           bloom test and the candidate lineage run once, not twice; it
+           holds one round's candidates, never |seen|
+           (BENCH/ab_fpp_ckpt_r7.json: -13% to -24% on the kernel).
         """
-        if self.seen_rows_approx < self.slim_join_min_rows:
-            # small-state shape: AQE broadcasts the whole anti-join at this
-            # size, and the slim shape's extra stages (survivor distinct +
-            # broadcast build + probe join) are pure fixed latency here
-            # (~1 s/round measured at toy rounds)
-            definitely_new = tested.filter(~F.col("maybe_seen"))
-            maybe = tested.filter(F.col("maybe_seen"))
-            resolved = maybe.join(self.seen.select("surt"), "surt", "left_anti")
-            return definitely_new.unionByName(resolved)
         keys = ["url_hash", "surt"]
-        if self.fpp_checkpoint_tested:
-            tested = tested.localCheckpoint(eager=True)
+        tested = tested.localCheckpoint(eager=True)
         survivors = (
             tested.filter(F.col("maybe_seen"))
             .select(*keys)
@@ -388,15 +394,18 @@ class SeenState:
     def restore(
         self, seen: DataFrame, bloom: DataFrame | None, assume_large: bool = True
     ) -> None:
-        """``assume_large``: on a true resume the state size is unknown
-        without an action, so assume large and let novel() pick the
-        scale-safe slim-join shape (semantics identical). The scheduler's
-        IN-LOOP lineage-truncation restore passes False — it already
-        tracks the exact approx via add() hints, and inflating it there
-        would permanently switch toy-sized crawls onto the slim join's
-        ~1 s/round fixed latency (ADVICE r3 #2)."""
+        """Resume a fresh state from a committed ``seen`` table (set
+        ``seen_rows_approx`` from the manifest first). ``assume_large``:
+        the manifest has no row count, so assume the bloom is on. With the
+        bloom on, a stored ``bloom`` (committed at or above the threshold,
+        so it holds every seen hash) is adopted; without one the bits are
+        built from ``seen`` — the same bits."""
         self.seen = seen
         if assume_large:
-            self.seen_rows_approx = max(self.seen_rows_approx, self.slim_join_min_rows)
-        if bloom is not None:
+            self.seen_rows_approx = max(self.seen_rows_approx, self.bloom_min_rows)
+        if not self.bloom_on:
+            return
+        if bloom is None:
+            self._insert(seen, seen.count())
+        else:
             self.bloom = bloom  # broadcast mode: seeds driver shards
