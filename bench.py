@@ -210,8 +210,8 @@ def run_kernel(spark, n_urls: int) -> dict:
     # seen set: half the key space pre-seen (steady-state crawl shape).
     # SPARK_GRAFT_KERNEL_BLOOM picks the serving mode: broadcast (default,
     # one broadcast of the numpy shards + pandas-UDF test) or sharded
-    # (cogroup). The bloom itself is on only from SeenState.bloom_min_rows
-    # pre-seen rows (4M URLs and up); below that bloom_mode reads "off".
+    # (cogroup). The bloom itself is on only above SeenState.bloom_above_rows
+    # pre-seen rows (above 4M URLs); up to that bloom_mode reads "off".
     bloom_mode = os.environ.get("SPARK_GRAFT_KERNEL_BLOOM", "broadcast")
     bloom_modes = ("broadcast", "sharded")
     if bloom_mode not in bloom_modes:

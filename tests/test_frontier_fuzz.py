@@ -1,9 +1,9 @@
 """Property-based frontier parity (VERDICT r7 next #3): hypothesis-drawn
 crawl instances — random link graphs, robots prefix rules, politeness
 budgets and mangled seed orders — each run on a drawn seen-set path
-(below the bloom threshold, broadcast bloom or cogroup-sharded bloom; the
-bloom paths draw a small threshold, so some crawls turn the bloom on
-between rounds), asserting run_crawl == the sequential oracle
+(below the bloom threshold, broadcast bloom or cogroup-sharded bloom; a
+bloom path turns the bloom on with the seed add or, drawn, at the add
+after round 0), asserting run_crawl == the sequential oracle
 (frontier/oracle.py) on every draw, plus crawl-contract invariants.
 Pattern follows tests/test_warc_fuzz.py.
 
@@ -127,14 +127,14 @@ def fuzz_spark(spark):
 @given(
     inst=crawl_instance(),
     seen_path=st.sampled_from(["below", "broadcast", "sharded"]),
-    bloom_min_rows=st.integers(0, 24),
+    cross=st.booleans(),
 )
 @settings(
     max_examples=6,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow],
 )
-def test_fuzzed_crawl_matches_sequential_oracle(fuzz_spark, inst, seen_path, bloom_min_rows):
+def test_fuzzed_crawl_matches_sequential_oracle(fuzz_spark, inst, seen_path, cross):
     spark = fuzz_spark
     docs, seeds, robots, politeness = inst
     docs_df = spark.createDataFrame(docs, DOCS_SCHEMA)
@@ -142,19 +142,32 @@ def test_fuzzed_crawl_matches_sequential_oracle(fuzz_spark, inst, seen_path, blo
     robots_df = spark.createDataFrame(robots, ROBOTS_SCHEMA)
     pol_df = spark.createDataFrame(politeness, POL_SCHEMA)
 
-    # the serving mode is derived from the bloom size; a zero driver
-    # budget makes the state start cogroup-sharded
-    seen_cls = SeenState
+    oracle = simulate_crawl(docs, seeds, robots, politeness, max_rounds=3)
+    # a bloom path's threshold is 0 (on with the seed add) or, crossing,
+    # the seed count in seen (on with the add after round 0). The serving
+    # mode is derived from the bloom size; a zero driver budget makes the
+    # state start cogroup-sharded
+    threshold = SeenState.bloom_above_rows
+    make = SeenState
     if seen_path != "below":
-        kw = {"broadcast_max_delta": 0} if seen_path == "sharded" else {}
-        seen_cls = partial(SeenState, bloom_min_rows=bloom_min_rows, **kw)
-    with mock.patch.object(scheduler, "SeenState", seen_cls):
+        n_seed_rows = len(oracle.seen) - sum(m["novel"] for m in oracle.metrics)
+        threshold = n_seed_rows if cross else 0
+    if seen_path == "sharded":
+        make = partial(SeenState, broadcast_max_delta=0)
+    built = []
+
+    def factory(*a, **kw):
+        built.append(make(*a, **kw))
+        return built[-1]
+
+    with mock.patch.object(scheduler, "SeenState", factory), \
+            mock.patch.object(SeenState, "bloom_above_rows", threshold):
         res = run_crawl(
             spark, docs_df, seeds_df, robots_df, pol_df,
             CrawlConfig(max_rounds=3, num_partitions=2, n_salts=2,
                         expected_total=4096),
         )
-    oracle = simulate_crawl(docs, seeds, robots, politeness, max_rounds=3)
+        assert built[0].bloom_on == (len(oracle.seen) > threshold)
 
     engine_log = [
         (r["round"], r["seq"], r["url_canon"], r["surt"], r["url_hash"],

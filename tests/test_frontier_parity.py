@@ -2,8 +2,8 @@
 (BASELINE.json metric; FIXTURES.md §6). Also: every seen-set path (below
 the bloom threshold, broadcast and sharded bloom, a mid-crawl crossing),
 salted top-k equivalence, checkpoint/resume equivalence. The fixture's
-seen set is far below ``SeenState.bloom_min_rows``, so a test that needs
-the bloom routes SeenState through a smaller threshold."""
+seen set is far below ``SeenState.bloom_above_rows``, so a test that needs
+the bloom patches in a smaller threshold."""
 
 from __future__ import annotations
 
@@ -73,9 +73,8 @@ def test_crawl_order_and_seen_parity(spark, fixture_dir, oracle_result, monkeypa
     # the seen-set size after round 0 and after round 1
     m = oracle_result.metrics
     after_r0 = len(oracle_result.seen) - sum(x["novel"] for x in m[1:])
-    built = _route_seen_state(
-        monkeypatch, partial(SeenState, bloom_min_rows=after_r0 + 1)
-    )
+    monkeypatch.setattr(SeenState, "bloom_above_rows", after_r0)
+    built = _route_seen_state(monkeypatch, SeenState)
     docs, seeds, robots, pol = _load_inputs(spark, fixture_dir)
     res = run_crawl(
         spark, docs, seeds, robots, pol,
@@ -117,9 +116,8 @@ def test_bloom_off_equivalence(spark, fixture_dir, oracle_result, monkeypatch):
 def test_bloom_sharded_equivalence(spark, fixture_dir, oracle_result, monkeypatch):
     # cogroup-sharded bloom path must match too: a zero driver budget
     # makes the state start sharded (the mode is derived, not configured)
-    built = _route_seen_state(
-        monkeypatch, partial(SeenState, broadcast_max_delta=0, bloom_min_rows=0)
-    )
+    monkeypatch.setattr(SeenState, "bloom_above_rows", 0)
+    built = _route_seen_state(monkeypatch, partial(SeenState, broadcast_max_delta=0))
     docs, seeds, robots, pol = _load_inputs(spark, fixture_dir)
     res = run_crawl(
         spark, docs, seeds, robots, pol,
@@ -173,7 +171,8 @@ def test_resume_without_bloom_table_builds_bits_from_seen(
     def bits(st):
         return {r["pid"]: bytes(r["bitset"]) for r in st.bloom.collect()}
 
-    built = _route_seen_state(monkeypatch, partial(SeenState, bloom_min_rows=0))
+    monkeypatch.setattr(SeenState, "bloom_above_rows", 0)
+    built = _route_seen_state(monkeypatch, SeenState)
     docs, seeds, robots, pol = _load_inputs(spark, fixture_dir)
     root = str(tmp_path / "snap_nobloom")
     run_crawl(spark, docs, seeds, robots, pol,
@@ -342,7 +341,8 @@ def test_auto_demotion_mid_crawl_parity(
 
     def small_budget(*a, **kw):
         # the derived start mode is broadcast
-        st = SeenState(*a, bloom_min_rows=0, **kw)
+        st = SeenState(*a, **kw)
+        st.bloom_above_rows = 0
         # round-0 seed add is small; round-1+ novel counts exceed 5 on
         # this fixture, so a max_delta of 5 forces a MID-crawl demotion
         st.broadcast_max_delta = 5

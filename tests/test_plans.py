@@ -168,8 +168,8 @@ def test_slim_novel_keeps_wide_columns_out_of_exchanges(spark):
     broadcast, not a shuffle."""
     from warchaeology_spark.frontier.seen import SeenState
 
-    st = SeenState(spark, num_partitions=4, expected_total=10_000,
-                   bloom_min_rows=0)
+    st = SeenState(spark, num_partitions=4, expected_total=10_000)
+    st.bloom_above_rows = 0  # the bloom shape at this size
     seen = spark.range(0, 1000, 2).select(
         F.col("id").alias("url_hash"),
         F.concat(F.lit("s"), F.col("id")).alias("surt"),

@@ -1,14 +1,20 @@
 """SeenState: the bloom turned on by the seen-set size, one live
 broadcast per change of the driver shards, the serving mode derived from
 the bloom size, demotion to the cogroup-sharded mode, and exact
-membership in every mode. The bloom needs ``bloom_min_rows=0`` to be on
-at these sizes."""
+membership in every mode. ``_state`` lowers the bloom threshold to 0, so
+the bloom turns on with the first add at these sizes."""
 
 from __future__ import annotations
 
 from pyspark.sql import functions as F
 
 from warchaeology_spark.frontier.seen import SeenState, _bloom_params, _fits_broadcast
+
+
+def _state(spark, bloom_above_rows=0, **kw):
+    st = SeenState(spark, **kw)
+    st.bloom_above_rows = bloom_above_rows
+    return st
 
 
 def _urls(spark, hashes):
@@ -22,7 +28,7 @@ def test_broadcast_bytes_track_delta_not_total(spark):
     """Broadcast bytes follow the delta: a novel() after an add() ships
     the live driver shards once, a novel() with no add() in between
     ships nothing and reuses the same broadcast; membership stays exact."""
-    st = SeenState(spark, num_partitions=8, expected_total=80_000, bloom_min_rows=0)
+    st = _state(spark, num_partitions=8, expected_total=80_000)
     shard_bytes = st.m_bits // 8
 
     # round 1: keys spread over ALL 8 shards
@@ -63,7 +69,7 @@ def test_broadcast_chain_compacts(spark, monkeypatch):
         return real_unpersist(self, blocking)
 
     monkeypatch.setattr(Broadcast, "unpersist", recording_unpersist)
-    st = SeenState(spark, num_partitions=4, expected_total=40_000, bloom_min_rows=0)
+    st = _state(spark, num_partitions=4, expected_total=40_000)
     shard_bytes = st.m_bits // 8
     built, added = [], []
     for r in range(4):
@@ -86,12 +92,12 @@ def test_broadcast_chain_compacts(spark, monkeypatch):
 
 
 def test_restore_seeds_driver_shards(spark):
-    st = SeenState(spark, num_partitions=4, expected_total=40_000, bloom_min_rows=0)
+    st = _state(spark, num_partitions=4, expected_total=40_000)
     st.add(_urls(spark, list(range(20))))
     snapshot_bloom = st.bloom  # property: built from driver shards
     snapshot_seen = st.seen.localCheckpoint(eager=True)
 
-    st2 = SeenState(spark, num_partitions=4, expected_total=40_000, bloom_min_rows=0)
+    st2 = _state(spark, num_partitions=4, expected_total=40_000)
     st2.restore(snapshot_seen, snapshot_bloom)
     got = {r["url_hash"] for r in st2.novel(_urls(spark, [5, 15, 777])).collect()}
     assert got == {777}
@@ -103,7 +109,7 @@ def test_large_delta_auto_demotes_to_sharded(spark, monkeypatch):
     # driver, and membership must stay exact across the migration
     from pyspark.sql import DataFrame
 
-    st = SeenState(spark, num_partitions=4, expected_total=40_000, bloom_min_rows=0)
+    st = _state(spark, num_partitions=4, expected_total=40_000)
     st.broadcast_max_delta = 50
     st.add(_urls(spark, list(range(10))))  # small delta: broadcast path
     assert st.broadcast_bloom and st._shards
@@ -131,7 +137,7 @@ def test_large_delta_auto_demotes_to_sharded(spark, monkeypatch):
 def test_add_without_hint_counts_before_collecting(spark):
     # no n_rows hint: broadcast mode must still demote on a large delta
     # (it counts first — the count is allowed, a row collect is not)
-    st = SeenState(spark, num_partitions=4, expected_total=40_000, bloom_min_rows=0)
+    st = _state(spark, num_partitions=4, expected_total=40_000)
     st.broadcast_max_delta = 5
     st.add(_urls(spark, list(range(20))))  # 20 > 5, no hint
     assert not st.broadcast_bloom
@@ -144,8 +150,8 @@ def test_add_without_hint_counts_rows_in_every_mode(spark):
     # same way whichever serving mode the state is in
     approx = {}
     for max_delta in (10_000_000, 0):  # derived start: broadcast, sharded
-        st = SeenState(spark, num_partitions=4, expected_total=40_000,
-                       broadcast_max_delta=max_delta, bloom_min_rows=0)
+        st = _state(spark, num_partitions=4, expected_total=40_000,
+                    broadcast_max_delta=max_delta)
         st.add(_urls(spark, list(range(30))))
         approx[st.is_sharded] = st.seen_rows_approx
     assert approx == {False: 30, True: 30}
@@ -172,16 +178,15 @@ def test_start_mode_derived_from_bloom_size():
 
 
 def test_slim_and_branchy_novel_shapes_agree(spark):
-    """novel() is the exact anti-join below bloom_min_rows and the bloom +
-    slim rescue join from it on; both shapes, in both serving modes, must
+    """novel() is the exact anti-join up to bloom_above_rows and the bloom +
+    slim rescue join above it; both shapes, in both serving modes, must
     return identical rows (incl. rescuing bloom false positives and
     keeping within-round duplicate candidates)."""
     seen_rows = list(range(0, 100, 2))
     cand_rows = list(range(50, 150)) + [51, 53]  # overlaps + dup candidates
 
-    def run(bloom_min, **kw):
-        st = SeenState(spark, num_partitions=4, expected_total=1000,
-                       bloom_min_rows=bloom_min, **kw)
+    def run(bloom_above, **kw):
+        st = _state(spark, bloom_above, num_partitions=4, expected_total=1000, **kw)
         st.add(_urls(spark, seen_rows))
         out = st.novel(_urls(spark, cand_rows))
         assert out.columns == ["url_hash", "surt", "url_canon"]
@@ -202,7 +207,7 @@ def _bits(st):
 
 
 def test_bits_built_at_crossing_equal_incremental_bits(spark):
-    """The add that crosses bloom_min_rows builds the bits from the whole
+    """The add that crosses bloom_above_rows builds the bits from the whole
     seen table; they equal, byte for byte, the bits of a state whose bloom
     was on from the first add, and every seen url_hash tests positive."""
     import numpy as np
@@ -212,13 +217,12 @@ def test_bits_built_at_crossing_equal_incremental_bits(spark):
     deltas = [list(range(0, 30)), list(range(100, 140)), list(range(500, 520))]
     for kw in ({}, {"broadcast_max_delta": 0}):  # broadcast, sharded
         states = {}
-        for bloom_min in (0, 50):  # on from the start; crosses at add #2
-            st = SeenState(spark, num_partitions=4, expected_total=4000,
-                           bloom_min_rows=bloom_min, **kw)
+        for bloom_above in (0, 50):  # on from the first add; crosses at add #2
+            st = _state(spark, bloom_above, num_partitions=4, expected_total=4000, **kw)
             for i, d in enumerate(deltas):
                 st.add(_urls(spark, d), n_rows=len(d))
-                assert st.bloom_on == (bloom_min == 0 or i >= 1)
-            states[bloom_min] = st
+                assert st.bloom_on == (bloom_above == 0 or i >= 1)
+            states[bloom_above] = st
         assert states[50].is_sharded == bool(kw)
         assert _bits(states[0]) == _bits(states[50])
         hashes = np.array([h for d in deltas for h in d], dtype=np.int64)

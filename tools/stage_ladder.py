@@ -8,7 +8,7 @@ attributes scaling per STAGE with much shorter timed units:
 
   1a canonicalize+materialize   (the suspected residual: regex+alloc)
   1b derive surt/host/hash      (byte-scan intrinsics from clean canon)
-  2  seen-set novel()           (bloom + slim join from 2M seen rows)
+  2  seen-set novel()           (bloom + slim join above 2M seen rows)
   3  politeness salted top-k    (two-phase window)
 
 Each config runs in a fresh JVM; inside it the whole pipeline warms up

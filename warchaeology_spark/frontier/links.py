@@ -29,16 +29,16 @@ LINK_RE = r"(?i)https?://[^\s\"'<>]+"
 TRAIL_STRIP_RE = r"[.,;)'\"]+$"
 
 
-def extract_outlinks(docs: DataFrame) -> DataFrame:
-    """-> (src_doc_id, src_url, span_offset, link_idx, raw_url), plus any
-    further columns of ``docs`` (besides doc_id, url, spans) carried onto
-    each link row.
+def extract_outlinks(docs: DataFrame, carry: tuple[str, ...] = ()) -> DataFrame:
+    """-> (src_doc_id, src_url, *carry, span_offset, link_idx, raw_url).
+
+    ``carry`` names columns of ``docs`` copied onto each of the document's
+    link rows (the scheduler carries the fetched page's ``src_depth``).
 
     One row per extracted link occurrence. Catalyst prunes ``spans`` down
     to the struct fields used; the explode is pipelined inside the scan
     stage (no shuffle).
     """
-    carry = [c for c in docs.columns if c not in ("doc_id", "url", "spans")]
     sp = docs.select(
         F.col("doc_id").alias("src_doc_id"),
         F.col("url").alias("src_url"),

@@ -3,7 +3,7 @@
 Iterative batch rounds over snapshot state (not Structured Streaming): at
 10^10-URL scale the seen/pending state must live in partitioned tables,
 not in a streaming state store. Each round is one declarative DataFrame
-plan; Catalyst/AQE pick physical strategies. Below the seen set's bloom
+plan; Catalyst/AQE pick physical strategies. Up to the seen set's bloom
 threshold no Python touches the data; above it the vectorized bloom test
 (seen.py) is the only Python on the data path.
 
@@ -33,7 +33,7 @@ Scale notes (100 TB / 1000-executor design points):
   hosts per round) -> broadcast; documents stays put. On a real cluster
   documents is Iceberg-bucketed by xxhash64(url) so even a huge scheduled
   side co-locates.
-- seen anti-join: hash-partitioned on url_hash; from 2M seen rows the
+- seen anti-join: hash-partitioned on url_hash; above 2M seen rows the
   bloom pre-filter removes the already-seen majority before the shuffle.
 - heavy-host skew: salted two-phase top-k (politeness.py) + AQE.
 - lineage: every round ends in a parquet-backed snapshot (checkpoint.py),
@@ -263,7 +263,7 @@ def run_crawl(
         # the live frontier; Iceberg swap: merge-on-read). bloom bitsets
         # mutate in place -> full rewrite (12 GB at the 10^10 design
         # point vs ~1 TB for seen — the seen/fetch_log deltas are the
-        # write-amplification fix that matters). Below the bloom
+        # write-amplification fix that matters). Up to the bloom
         # threshold the bloom table is all zeros.
         store.commit(
             {"pending": pending, "bloom": seen_state.bloom},
@@ -330,16 +330,15 @@ def run_crawl(
         # fetch: exact canonical-URL match against the document table.
         # scheduled is tiny vs documents -> broadcast the scheduled side,
         # ONCE: the fetched rows carry their depth onto their link rows.
-        # A second broadcast (for src_depth) was a second stage reading the
-        # lazy `scheduled` checkpoint concurrently with the first, and the
-        # two raced to store its block.
+        # Two broadcasts of it would be two stages reading the lazy
+        # `scheduled` checkpoint at once, racing to store its block.
         fetched_docs = documents.join(
             F.broadcast(scheduled.select(
                 F.col("url_canon").alias("url"), F.col("depth").alias("src_depth")
             )),
             "url",
         )
-        links = extract_outlinks(fetched_docs.select("doc_id", "url", "spans", "src_depth"))
+        links = extract_outlinks(fetched_docs, carry=("src_depth",))
         # Two-step canonicalization around the dedup shuffle: the map side
         # computes ONLY the surt grouping key (one parse tree + its filter
         # copy — Catalyst inlines column expressions into every consumer,

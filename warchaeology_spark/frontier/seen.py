@@ -19,8 +19,8 @@ driver-side bloom: ~12 GB at 1% fpp) cannot work; the Spark-native design:
   steady-state crawl where most discovered links are already seen, the
   bloom removes the dominant shuffle.
 
-One rule picks the path: the bloom is on from ``bloom_min_rows`` seen
-rows. Below it ``add()`` only unions and counts and ``novel()`` is the
+One rule picks the path: the bloom is on above ``bloom_above_rows`` seen
+rows. Up to it ``add()`` only unions and counts and ``novel()`` is the
 exact anti-join on ``surt``. The add that crosses the threshold inserts
 the whole ``seen`` table, later adds their delta: the bits depend only on
 the set of seen hashes, so the crossing cannot change a result.
@@ -40,6 +40,7 @@ from __future__ import annotations
 
 import math
 from dataclasses import dataclass
+from typing import ClassVar
 
 import numpy as np
 import pandas as pd
@@ -107,12 +108,11 @@ class SeenState:
     # the state to sharded before any row data reaches the driver
     # (VERDICT r2 #2: ~800 MB single-threaded at 10^8 rows/round).
     broadcast_max_delta: int = 10_000_000
-    # the bloom is on from this many (approx) seen rows. The exact
-    # anti-join alone won at 0.5M and at 2M (BENCH/ab_bloom_kernel.json),
-    # so no bloom crossover is known: the threshold is the slim-join
-    # crossover (2x over the branchy bloom join at 8M+ keys), and the
-    # bloom stays for the 10^10 design point
-    bloom_min_rows: int = 2_000_000
+    # the bloom is on above this many (approx) seen rows: a floor above
+    # every measured loss, not a crossover (BENCH/ab_bloom_kernel.json:
+    # the anti-join alone won up to and including 2M seen rows). A class
+    # constant; tests patch it to turn the bloom on at fixture size.
+    bloom_above_rows: ClassVar[int] = 2_000_000
 
     def __post_init__(self):
         self.m_bits, self.k = _bloom_params(
@@ -180,9 +180,9 @@ class SeenState:
     # -- helpers ------------------------------------------------------------
     @property
     def bloom_on(self) -> bool:
-        """The one path rule: from ``bloom_min_rows`` seen rows on, the
+        """The one path rule: above ``bloom_above_rows`` seen rows the
         bloom holds every seen hash and ``novel()`` tests it first."""
-        return self.seen_rows_approx >= self.bloom_min_rows
+        return self.seen_rows_approx > self.bloom_above_rows
 
     @property
     def is_sharded(self) -> bool:
@@ -216,7 +216,7 @@ class SeenState:
 
         ``n_rows``: the delta's row count when the caller already knows it
         (the round loop does — no extra action); without it the delta is
-        counted first (one cheap job). Below ``bloom_min_rows`` that is
+        counted first (one cheap job). Up to ``bloom_above_rows`` that is
         all; the add that crosses it inserts the whole seen table into the
         bloom, later adds their delta."""
         rows = urls.select("url_hash", "surt", "url_canon")
@@ -397,12 +397,12 @@ class SeenState:
         """Resume a fresh state from a committed ``seen`` table (set
         ``seen_rows_approx`` from the manifest first). ``assume_large``:
         the manifest has no row count, so assume the bloom is on. With the
-        bloom on, a stored ``bloom`` (committed at or above the threshold,
+        bloom on, a stored ``bloom`` (committed above the threshold,
         so it holds every seen hash) is adopted; without one the bits are
         built from ``seen`` — the same bits."""
         self.seen = seen
         if assume_large:
-            self.seen_rows_approx = max(self.seen_rows_approx, self.bloom_min_rows)
+            self.seen_rows_approx = max(self.seen_rows_approx, self.bloom_above_rows + 1)
         if not self.bloom_on:
             return
         if bloom is None:
