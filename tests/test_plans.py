@@ -188,3 +188,27 @@ def test_slim_novel_keeps_wide_columns_out_of_exchanges(spark):
     for line in phys.splitlines():
         if "Exchange hashpartitioning" in line:
             assert "url_canon" not in line, line
+
+
+def test_frontier_parse_is_inlined_once(spark):
+    """The frontier's URL parses (the seed step and the round's candidate
+    links) hold the parse once per row: the authority regex appears once
+    in the optimized plan, and no Filter inlines a regex extract. A filter
+    on the parse output is pushed below the projections with the parse
+    substituted into it; the fused codegen method then outgrows HotSpot's
+    8,000-byte JIT limit and runs interpreted."""
+    from warchaeology_spark.frontier.scheduler import _candidates, _canonicalized
+    from warchaeology_spark.functions.urls import _AUTH_RE
+
+    seeds = spark.createDataFrame([("http://a.example/x", 0)], "url string, seed_rank int")
+    links = spark.createDataFrame(
+        [("d0", "http://a.example/", 0, 0, 0, "http://b.example/y?b&a")],
+        "src_doc_id string, src_url string, src_depth int, span_offset int,"
+        " link_idx int, raw_url string",
+    )
+    for df in (_canonicalized(seeds, "url"), _candidates(links)):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert plan.count(_AUTH_RE) == 1, plan
+        for line in plan.splitlines():
+            if line.lstrip(" :+-").startswith("Filter"):
+                assert "regexp_extract" not in line, line

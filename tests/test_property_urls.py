@@ -1,7 +1,8 @@
 """Property-based canonicalization parity (hypothesis): for arbitrary
-URL-ish strings the three implementations — JVM column builder, Arrow
-pandas UDF, pure-Python oracle — agree. One Spark action per example
-batch (lists of strings), deterministic seed via hypothesis defaults."""
+URL-ish strings the four implementations — JVM column builders, the
+staged JVM transform, Arrow pandas UDF, pure-Python oracle — agree. One
+Spark action per example batch (lists of strings), deterministic seed via
+hypothesis defaults."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ from warchaeology_spark.functions.urls import (
     canonicalize_url,
     canonicalize_url_arrow,
     surt_key,
+    with_canonical,
 )
 
 scheme = st.sampled_from(["http", "https", "HTTP", "HtTpS", "ftp", "mailto", ""])
@@ -24,6 +26,9 @@ path = st.sampled_from(["", "/", "/a", "/a/b%20c", "//d", "/ space"])
 query = st.sampled_from(["", "?", "?a=1", "?b=2&a=1", "?z&&y", "?a=1&a=0"])
 frag = st.sampled_from(["", "#", "#frag"])
 junk = st.text(max_size=20).filter(lambda s: "\\" not in s)
+# appended to every drawn batch: NULL and empty input, and hosts that are
+# not ASCII (never crawlable), so NULL propagates through the staged `_ok`
+EDGE = [None, "", " ", "http://bücher.example/p", "HTTPS://ÉCOLE.fr:443/?b&a", "//例え.jp/x"]
 
 
 @st.composite
@@ -44,9 +49,18 @@ def urlish(draw):
     )
 
 
+def _staged(spark, batch):
+    """with_canonical over the batch: {index: (url_canon, surt, host)} of
+    the rows it keeps."""
+    df = spark.createDataFrame(list(enumerate(batch)), "i int, url string")
+    return {r["i"]: tuple(r[1:]) for r in with_canonical(df, "url").select(
+        "i", "url_canon", "surt", "host").collect()}
+
+
 @settings(max_examples=4, deadline=None)
 @given(st.lists(urlish(), min_size=100, max_size=100))
 def test_three_way_canonicalization_agreement(spark, batch):
+    batch = batch + EDGE
     df = spark.createDataFrame([(u,) for u in batch], "url string")
     rows = df.select(
         "url",
@@ -55,12 +69,15 @@ def test_three_way_canonicalization_agreement(spark, batch):
         canonical_parts("url")["host"].alias("host"),
         canonicalize_url_arrow(F.col("url")).alias("strict_pd"),
     ).collect()
-    for r in rows:
+    staged = _staged(spark, batch)
+    for i, r in enumerate(rows):
         py = canonicalize_py(r["url"])
         assert r["canon"] == (py[0] if py else None), repr(r["url"])
         assert r["surt"] == (py[1] if py else None), repr(r["url"])
         assert r["host"] == (py[2] if py else None), repr(r["url"])
         assert r["strict_pd"] == r["canon"], repr(r["url"])
+        # the staged transform keeps exactly the crawlable rows
+        assert staged.get(i) == py, repr(r["url"])
 
 
 backslash_junk = st.text(
@@ -85,19 +102,14 @@ def test_strict_arrow_matches_jvm_even_with_backslashes(spark, batch):
 
 
 @settings(max_examples=4, deadline=None)
-@given(st.lists(urlish(), min_size=100, max_size=100))
-def test_parts_from_canon_matches_canonical_parts(spark, batch):
-    # two-step parse parity: deriving surt/host from the canonical string
-    # must equal the direct canonical_parts derivation from the raw URL
-    from warchaeology_spark.functions.urls import canonical_parts, parts_from_canon
-
+@given(st.lists(st.one_of(urlish(), backslash_junk), min_size=100, max_size=100))
+def test_staged_parse_matches_canonical_parts(spark, batch):
+    # one spec, two renderings: the staged transform keeps a row exactly
+    # when the nested builder's url_canon is non-NULL, with equal fields
+    batch = batch + EDGE
     df = spark.createDataFrame([(u,) for u in batch], "url string")
-    rows = (
-        df.select(canonical_parts(F.col("url")).alias("cp"))
-        .filter(F.col("cp.url_canon").isNotNull())
-        .select("cp", parts_from_canon(F.col("cp.url_canon")).alias("d"))
-        .collect()
-    )
-    for r in rows:
-        assert r["d"]["surt"] == r["cp"]["surt"], r
-        assert r["d"]["host"] == r["cp"]["host"], r
+    nested = [r["cp"] for r in df.select(canonical_parts("url").alias("cp")).collect()]
+    staged = _staged(spark, batch)
+    for i, cp in enumerate(nested):
+        want = None if cp["url_canon"] is None else (cp["url_canon"], cp["surt"], cp["host"])
+        assert staged.get(i) == want, repr(batch[i])

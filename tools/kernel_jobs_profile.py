@@ -27,10 +27,7 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from warchaeology_spark.frontier.politeness import politeness_topk  # noqa: E402
 from warchaeology_spark.frontier.seen import SeenState  # noqa: E402
-from warchaeology_spark.functions.urls import (  # noqa: E402
-    canonicalize_url,
-    parts_from_canon,
-)
+from warchaeology_spark.functions.urls import with_canonical  # noqa: E402
 from warchaeology_spark.session import get_spark  # noqa: E402
 
 
@@ -77,20 +74,16 @@ def main() -> None:
     ).localCheckpoint(eager=True)
 
     def run_pass(in_urls):
-        canon_step = (
-            in_urls.select(canonicalize_url(F.col("raw_url")).alias("url_canon"))
-            .filter(F.col("url_canon").isNotNull())
+        cand = (
+            with_canonical(in_urls, "raw_url")
+            .select(
+                "url_canon", "surt", "host",
+                F.xxhash64("surt").alias("url_hash"),
+                F.lit(0).alias("depth"),
+            )
             # lazy, as in bench.py run_kernel — the profile must attribute
             # the shape the ladder actually measures
             .localCheckpoint(eager=False)
-        )
-        d = parts_from_canon(F.col("url_canon"))
-        cand = canon_step.select(
-            "url_canon", d["surt"].alias("surt"), d["host"].alias("host")
-        ).select(
-            "url_canon", "surt", "host",
-            F.xxhash64("surt").alias("url_hash"),
-            F.lit(0).alias("depth"),
         )
         novel = seen.novel(cand)
         scheduled = politeness_topk(novel, pol, default_budget=16, n_salts=8)

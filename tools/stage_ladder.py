@@ -6,8 +6,7 @@ burst, while the 5x-shorter 16-core passes find clean windows (the r3
 driver re-run even measured super-linear 1.168 this way). This tool
 attributes scaling per STAGE with much shorter timed units:
 
-  1a canonicalize+materialize   (the suspected residual: regex+alloc)
-  1b derive surt/host/hash      (byte-scan intrinsics from clean canon)
+  1  staged parse+materialize   (url_canon/surt/host/hash, with_canonical)
   2  seen-set novel()           (bloom + slim join above 2M seen rows)
   3  politeness salted top-k    (two-phase window)
 
@@ -31,7 +30,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-STAGES = ["canon", "derive", "novel", "topk"]
+STAGES = ["parse", "novel", "topk"]
 
 
 def child(cpus: int, n_urls: int, passes: int) -> None:
@@ -39,7 +38,7 @@ def child(cpus: int, n_urls: int, passes: int) -> None:
 
     from warchaeology_spark.frontier.politeness import politeness_topk
     from warchaeology_spark.frontier.seen import SeenState
-    from warchaeology_spark.functions.urls import canonicalize_url, parts_from_canon
+    from warchaeology_spark.functions.urls import with_canonical
     from warchaeology_spark.session import get_spark
 
     n_hosts = 10_000
@@ -92,23 +91,15 @@ def child(cpus: int, n_urls: int, passes: int) -> None:
     def one_pass(in_urls) -> dict[str, float]:
         times: dict[str, float] = {}
         t0 = time.monotonic()
-        canon = (
-            in_urls.select(canonicalize_url(F.col("raw_url")).alias("url_canon"))
-            .filter(F.col("url_canon").isNotNull())
-            .localCheckpoint(eager=True)
-        )
-        times["canon"] = time.monotonic() - t0
-        d = parts_from_canon(F.col("url_canon"))
-        t0 = time.monotonic()
         cand = (
-            canon.select("url_canon", d["surt"].alias("surt"), d["host"].alias("host"))
+            with_canonical(in_urls, "raw_url")
             .select(
                 "url_canon", "surt", "host",
                 F.xxhash64("surt").alias("url_hash"), F.lit(0).alias("depth"),
             )
             .localCheckpoint(eager=True)
         )
-        times["derive"] = time.monotonic() - t0
+        times["parse"] = time.monotonic() - t0
         t0 = time.monotonic()
         novel = seen.novel(cand).localCheckpoint(eager=True)
         novel.count()

@@ -51,7 +51,7 @@ from warchaeology_spark.frontier.checkpoint import SnapshotStore
 from warchaeology_spark.frontier.links import extract_outlinks
 from warchaeology_spark.frontier.politeness import politeness_topk, robots_gate
 from warchaeology_spark.frontier.seen import SeenState
-from warchaeology_spark.functions.urls import canonical_parts, surt_key
+from warchaeology_spark.functions.urls import with_canonical
 from warchaeology_spark.plans.ranks import global_sequence
 
 PENDING_COLS = ["surt", "url_canon", "url_hash", "host", "depth", "src_doc_id"]
@@ -93,17 +93,15 @@ class CrawlResult:
 def _canonicalized(df: DataFrame, url_col: str) -> DataFrame:
     """Attach url_canon / surt / url_hash / host; drop non-crawlable rows.
 
-    One fused parse (canonical_parts) supplies all three string columns;
+    One staged parse (with_canonical) supplies all three string columns;
     the hash is xxhash64 over the surt (the seen-set identity key).
     """
-    out = (
-        df.withColumn("_cp", canonical_parts(url_col))
-        .select("*", "_cp.url_canon", "_cp.surt", "_cp.host")
-        .drop("_cp")
-        .filter(F.col("url_canon").isNotNull())
-        .withColumn("url_hash", F.xxhash64("surt"))
-    )
-    return out
+    return with_canonical(df, url_col).withColumn("url_hash", F.xxhash64("surt"))
+
+
+def _candidates(links: DataFrame) -> DataFrame:
+    """Attach the surt dedup key to each crawlable link; drop the rest."""
+    return with_canonical(links, "raw_url").drop("url_canon", "host")
 
 
 def _init_pending(seeds: DataFrame) -> DataFrame:
@@ -340,16 +338,12 @@ def run_crawl(
         )
         links = extract_outlinks(fetched_docs, carry=("src_depth",))
         # Two-step canonicalization around the dedup shuffle: the map side
-        # computes ONLY the surt grouping key (one parse tree + its filter
-        # copy — Catalyst inlines column expressions into every consumer,
-        # so each extra derived column would re-run the full parse per
-        # row); the winner's url_canon/host are derived AFTER the shuffle,
-        # on the deduped survivors only. Same winner row, same outputs:
-        # the min_by order tuple is unchanged, and url_canon/host are pure
-        # functions of the winning raw_url.
-        cands = links.withColumn("surt", surt_key(F.col("raw_url"))).filter(
-            F.col("surt").isNotNull()
-        )
+        # keeps only the surt grouping key of its staged parse, and the
+        # winner's url_canon/host are parsed AFTER the shuffle, on the
+        # deduped survivors only. Same winner row, same outputs: the min_by
+        # order tuple is unchanged, and url_canon/host are pure functions
+        # of the winning raw_url.
+        cands = _candidates(links)
         # same-round first-wins per surt: min over the discovery total order
         winners = cands.groupBy("surt").agg(
             F.min_by(
@@ -357,12 +351,11 @@ def run_crawl(
                 F.struct("src_depth", "src_url", "span_offset", "link_idx"),
             ).alias("w")
         )
-        wcp = canonical_parts(F.col("w.raw_url"))
-        discovered = winners.select(
+        discovered = with_canonical(winners, "w.raw_url").select(
             "surt",
-            wcp["url_canon"].alias("url_canon"),
+            "url_canon",
             F.xxhash64("surt").alias("url_hash"),
-            wcp["host"].alias("host"),
+            "host",
             (F.col("w.src_depth") + 1).alias("depth"),
             F.col("w.src_doc_id").alias("src_doc_id"),
         )

@@ -20,7 +20,6 @@ from warchaeology_spark.functions.dates import (  # noqa: F401
 )
 from warchaeology_spark.functions.digests import payload_digest_or_computed  # noqa: F401
 from warchaeology_spark.functions.urls import (  # noqa: F401
-    url_parts,
     canonicalize_url,
     surt_key,
     xxhash64_py,

@@ -7,7 +7,7 @@ The frontier (north rule) additionally needs a *canonical* URL and a
 SURT-style sort/partition key.
 
 Canonicalization spec (every implementation here agrees with it on every
-input, backslashes included; the tests fuzz all three against each other):
+input, backslashes included; the tests fuzz all four against each other):
 
 1. trim; only ``http``/``https`` schemes are crawlable -> others yield NULL;
    scheme-relative ``//host/..`` and bare ``host/path`` get ``http://``.
@@ -22,26 +22,27 @@ input, backslashes included; the tests fuzz all three against each other):
 
 Implementations:
 
-- ``canonical_parts`` — the production path: builtin column expressions
-  (JVM, whole-stage-codegen, usable in predicate pushdown) yielding
-  ``url_canon``, ``surt`` and ``host`` from one ``url_parts`` parse.
-  ``canonicalize_url`` and ``surt_key`` are two of its fields, built by
-  the same ``_canonical_fields``, not separate trees.
+- ``_STAGES`` — the production spec, written once as ordered JVM column
+  stages (builtin expressions, whole-stage codegen). ``with_canonical``
+  applies them as successive projections: the staged JVM parse the
+  frontier and the bench.py kernel run, once per row. ``canonicalize_url``,
+  ``surt_key`` and ``canonical_parts`` are the same stages substituted
+  into one nested Column, for select lists (the registry, ``ls``).
 - ``canonicalize_url_arrow`` — the same spec as an Arrow-batched pandas
   UDF, kept as the A/B candidate for the frontier's parse.
 - ``canonicalize_py`` — the pure-Python oracle used by the sequential
   crawl oracle.
 
-``parts_from_canon`` derives ``surt``/``host`` from an already-canonical
-URL (the second stage of the two-step frontier parse). ``xxhash64_py`` is
-a pure-Python XXH64 (seed 42) used by the sequential parity oracle and
-tested to match Spark's builtin ``xxhash64`` bit-for-bit.
+``xxhash64_py`` is a pure-Python XXH64 (seed 42) used by the sequential
+parity oracle and tested to match Spark's builtin ``xxhash64`` bit-for-bit.
 """
 
 from __future__ import annotations
 
+import functools
+
 import pandas as pd
-from pyspark.sql import Column
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -64,50 +65,106 @@ def _with_scheme(c: Column) -> Column:
     )
 
 
-def url_parts(url: Column | str) -> Column:
-    """Struct<scheme,host,port,path,query> parsed with JVM expressions.
+# The JVM spec, written once: ordered stages, each mapping new column
+# names to expressions over the input URL ("_in") and earlier stages'
+# columns, read through ``c`` (name -> Column). ``with_canonical`` applies
+# the stages as successive projections; the Column builders substitute
+# them into one nested tree. Byte-scan ``substring_index`` replaces a regex
+# wherever it is equivalent (r4 A/B `jvm_intrinsics`: +34% on 4 cores, +21%
+# on 16 over the all-regex chain, fuzz-verified bit-identical):
+# - scheme: after ``_with_scheme`` the FIRST ':' always terminates the
+#   scheme (scheme chars exclude ':'), so no anchor regex is needed;
+# - userinfo strip: segment after the LAST '@' == greedy ``^.*@`` strip;
+# - host: prefix before the first ':' == ``^([^:]*)``.
+# The auth/path/query extractions stay compiled regexes: the r2 shootout
+# showed chains of many allocating intrinsics LOSE to few compiled regex
+# passes. sort_array/array_remove, NOT array_sort/filter-with-lambda:
+# lambda higher-order functions are CodegenFallback (interpreted eval).
+# ``(?d)`` (UNIX_LINES) gives Java's ``$`` Python's meaning, end or before
+# a final "\n": Java's own ``$`` also matches before a final "\r", U+0085,
+# U+2028 or U+2029, so the JVM took ``http://f\x85`` for a crawlable host.
+# Digits are ``[0-9]``: Python's ``\d`` also matches non-ASCII digits.
+_STAGES = (
+    lambda c: {"_u": _with_scheme(c("_in"))},
+    lambda c: {
+        "_scheme": F.lower(F.substring_index(c("_u"), ":", 1)),
+        "_hp": F.substring_index(F.regexp_extract(c("_u"), _AUTH_RE, 1), "@", -1),
+        "_path": F.regexp_extract(c("_u"), _PATH_RE, 1),
+        "_query": F.sort_array(
+            F.array_remove(F.split(F.regexp_extract(c("_u"), _QUERY_RE, 1), "&"), "")
+        ),
+    },
+    lambda c: {
+        "_host": F.lower(F.regexp_replace(F.substring_index(c("_hp"), ":", 1), r"(?d)\.$", "")),
+        "_port": F.regexp_extract(c("_hp"), r"(?d):([0-9]+)$", 1),
+    },
+    lambda c: {
+        "_ok": c("_scheme").isin("http", "https")
+        & (c("_host") != "")
+        & c("_host").rlike(r"(?d)^[a-z0-9.\-]+$"),
+        "_portpart": F.when(
+            (c("_port") == "")
+            | ((c("_scheme") == "http") & (c("_port") == "80"))
+            | ((c("_scheme") == "https") & (c("_port") == "443")),
+            F.lit(""),
+        ).otherwise(F.concat(F.lit(":"), c("_port"))),
+        "_tail": F.concat(
+            F.when(c("_path") == "", F.lit("/")).otherwise(c("_path")),
+            F.when(F.size(c("_query")) > 0, F.concat(F.lit("?"), F.array_join(c("_query"), "&")))
+            .otherwise(F.lit("")),
+        ),
+    },
+    lambda c: {
+        "url_canon": F.when(
+            c("_ok"), F.concat(c("_scheme"), F.lit("://"), c("_host"), c("_portpart"), c("_tail"))
+        ),
+        "surt": F.when(
+            c("_ok"),
+            F.concat(
+                F.array_join(F.reverse(F.split(c("_host"), r"\.")), ","),
+                c("_portpart"), F.lit(")"), c("_tail"),
+            ),
+        ),
+        "host": F.when(c("_ok"), c("_host")),
+    },
+)
 
-    Mixed regex/intrinsic chain (r4 A/B `jvm_intrinsics`, +34%/4-core and
-    +21%/16-core over the all-regex chain, fuzz-verified bit-identical):
-    the three cheapest regex steps are byte-scan ``substring_index`` —
-    - scheme: after ``_with_scheme`` the FIRST ':' always terminates the
-      scheme (scheme chars exclude ':'), so no anchor regex is needed;
-    - userinfo strip: segment after the LAST '@' == greedy ``^.*@`` strip;
-    - host: prefix before the first ':' == ``^([^:]*)``.
-    The auth/path/query extractions stay compiled regexes — the r2
-    shootout showed chains of many allocating intrinsics LOSE to few
-    compiled regex passes; only 1:1 regex->intrinsic swaps win."""
-    u = _with_scheme(F.col(url) if isinstance(url, str) else url)
-    scheme = F.lower(F.substring_index(u, ":", 1))
-    auth = F.regexp_extract(u, _AUTH_RE, 1)
-    hostport = F.substring_index(auth, "@", -1)  # strip userinfo (last @)
-    host = F.lower(F.regexp_replace(F.substring_index(hostport, ":", 1), r"\.$", ""))
-    port = F.regexp_extract(hostport, r":(\d+)$", 1)
-    port = F.when(
-        ((scheme == "http") & (port == "80")) | ((scheme == "https") & (port == "443")),
-        F.lit(""),
-    ).otherwise(port)
-    path = F.regexp_extract(u, _PATH_RE, 1)
-    path = F.when(path == "", F.lit("/")).otherwise(path)
-    query = F.regexp_extract(u, _QUERY_RE, 1)
-    # sort_array/array_remove, NOT array_sort/filter-with-lambda: lambda
-    # higher-order functions are CodegenFallback, and a fallback expression
-    # drags its whole subtree into interpreted eval at every reference —
-    # this line is embedded in canon+surt+filter copies on the hot path.
-    query = F.array_join(F.sort_array(F.array_remove(F.split(query, "&"), "")), "&")
-    return F.struct(
-        scheme.alias("scheme"),
-        host.alias("host"),
-        port.alias("port"),
-        path.alias("path"),
-        query.alias("query"),
-    )
+
+def with_canonical(df: DataFrame, url: Column | str) -> DataFrame:
+    """``df`` plus url_canon, surt and host per the module spec, keeping
+    only the crawlable rows: the frontier's parse, once per row.
+
+    Each stage is its own projection. A nested Column is a tree to
+    Catalyst, so every consumer gets its own copy of the parse, and a
+    null filter on its output is pushed below the projection with the
+    whole parse inlined: the fused codegen method then outgrows HotSpot's
+    8,000-byte JIT limit and runs interpreted. Staged, ``CollapseProject``
+    keeps an expensive column with several consumers in its own
+    projection. Rows are dropped by exploding a 0-or-1 element array on
+    ``_ok``, not by a Filter: Catalyst would push a Filter below the
+    stages, inlining ``_ok``'s subtree (the authority regex included).
+    """
+    src = F.col(url) if isinstance(url, str) else url
+    stages = (_STAGES[0](lambda _: src), *_named_stages())
+    for cols in stages:
+        df = df.withColumns(cols)
+    return df.drop("_keep", *[name for cols in stages[:-1] for name in cols])
+
+
+@functools.cache
+def _named_stages() -> tuple[dict[str, Column], ...]:
+    """The stages after the first, over column names, the last one with
+    the ``_keep`` explode. They do not depend on the input, so they are
+    built once per process: each Column is a py4j round trip, and
+    rebuilding them took ~70 ms per parse (warm local[2], 4 cores)."""
+    stages = [stage(F.col) for stage in _STAGES[1:]]
+    keep = F.explode(F.when(F.col("_ok"), F.array(F.lit(True))))
+    return (*stages[:-1], {"_keep": keep, **stages[-1]})
 
 
 def _canonical_fields(url: Column | str) -> dict[str, Column]:
     """url_canon, surt and host per the module spec, each NULL for a
-    non-http(s) or hostless URL: the one place the JVM path writes the
-    spec down.
+    non-http(s) or hostless URL: ``_STAGES`` substituted into one tree.
 
     The public builders take the fields they need from here rather than
     indexing the canonical_parts struct: both give the same optimized
@@ -115,27 +172,17 @@ def _canonical_fields(url: Column | str) -> dict[str, Column]:
     which added ~20 ms of planning per select (surt_key plus a null
     filter, warm local[2] session on 4 cores: 0.047 -> 0.070 s).
     """
-    p = url_parts(url)
-    ok = p["scheme"].isin("http", "https") & (p["host"] != "") & p["host"].rlike(
-        r"^[a-z0-9.\-]+$"
-    )
-    portpart = F.when(p["port"] != "", F.concat(F.lit(":"), p["port"])).otherwise(F.lit(""))
-    qpart = F.when(p["query"] != "", F.concat(F.lit("?"), p["query"])).otherwise(F.lit(""))
-    canon = F.concat(p["scheme"], F.lit("://"), p["host"], portpart, p["path"], qpart)
-    rev_host = F.array_join(F.reverse(F.split(p["host"], r"\.")), ",")
-    surt = F.concat(rev_host, portpart, F.lit(")"), p["path"], qpart)
-    return {
-        "url_canon": F.when(ok, canon),
-        "surt": F.when(ok, surt),
-        "host": F.when(ok, p["host"]),
-    }
+    env = {"_in": F.col(url) if isinstance(url, str) else url}
+    for stage in _STAGES:
+        env.update(stage(env.__getitem__))
+    return env
 
 
 def canonical_parts(url: Column | str) -> Column:
     """Struct<url_canon, surt, host> per the module spec, all NULL for a
-    non-http(s) or hostless URL. One url_parts evaluation feeds all three
-    fields (the frontier's hot path reads them together)."""
-    return F.struct(*[c.alias(name) for name, c in _canonical_fields(url).items()])
+    non-http(s) or hostless URL."""
+    f = _canonical_fields(url)
+    return F.struct(*[f[name].alias(name) for name in ("url_canon", "surt", "host")])
 
 
 def canonicalize_url(url: Column | str) -> Column:
@@ -175,7 +222,7 @@ def _canonicalize_pd_strict(s: pd.Series) -> pd.Series:
         hostport.str.split(":", n=1).str[0].str.lower()
         .str.replace(r"\.$", "", regex=True)
     )
-    port = hostport.str.extract(r":(\d+)$")[0].fillna("")
+    port = hostport.str.extract(r":([0-9]+)$")[0].fillna("")
     port = port.mask(
         ((scheme == "http") & (port == "80")) | ((scheme == "https") & (port == "443")),
         "",
@@ -296,7 +343,7 @@ def canonicalize_py(url: str | None) -> tuple[str, str, str] | None:
     hostport = _re.sub(r"^.*@", "", auth)
     hm = _re.match(r"^([^:]*)", hostport)
     host = _re.sub(r"\.$", "", (hm.group(1) if hm else "").lower())
-    pm = _re.search(r":(\d+)$", hostport)
+    pm = _re.search(r":([0-9]+)$", hostport)
     port = pm.group(1) if pm else ""
     if (scheme == "http" and port == "80") or (scheme == "https" and port == "443"):
         port = ""
@@ -315,31 +362,3 @@ def canonicalize_py(url: str | None) -> tuple[str, str, str] | None:
     surt = ",".join(reversed(host.split("."))) + portpart + ")" + path + qpart
     return canon, surt, host
 
-
-def parts_from_canon(canon: Column | str) -> Column:
-    """Struct<surt, host> derived from an ALREADY-CANONICAL url.
-
-    ``url_canon`` is clean by construction — ``scheme://host[:port]path
-    [?query]`` with a lowercase dot-trimmed host, path always starting
-    with ``/`` — so SURT and host fall out of byte-scan intrinsics
-    (substring_index/instr), no regexes. This is the second stage of the
-    two-step frontier parse: stage 1 materializes ``url_canon`` once
-    (checkpoint/shuffle boundary), stage 2 derives the rest cheaply, so
-    the expensive raw-URL parse runs ONCE per row instead of once per
-    consumer expression (Catalyst inlines column expressions into every
-    consumer; see BENCH/BASELINE.md round-2 notes).
-
-    Parity contract (tested): for any raw URL,
-    ``parts_from_canon(canonicalize_url(u))`` equals ``canonical_parts(u)``
-    on the surt and host fields.
-    """
-    c = F.col(canon) if isinstance(canon, str) else canon
-    after = F.substring(c, F.instr(c, "://") + 3, 1 << 30)
-    hostport = F.substring_index(after, "/", 1)  # path always starts with '/'
-    host = F.substring_index(hostport, ":", 1)
-    portpart = F.substring(hostport, F.length(host) + 1, 1 << 30)  # ':port' or ''
-    pathq = F.substring(after, F.length(hostport) + 1, 1 << 30)
-    surt = F.concat(
-        F.array_join(F.reverse(F.split(host, r"\.")), ","), portpart, F.lit(")"), pathq
-    )
-    return F.struct(surt.alias("surt"), host.alias("host"))
