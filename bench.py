@@ -16,8 +16,8 @@ full bench, frontier URLs/sec in --frontier-only, kernel URLs/sec in
 
 Modes (argv[1]):
   (none)          full bench: headline queries + frontier throughput
-  --frontier-only only the frontier job (used by tools/bench_scaling.py,
-                  which runs it at two parallelism levels for the N-vs-4N
+  --frontier-only only the frontier job (used by tools/exec_scaling.py,
+                  which runs it at 1/2/4 executors for the N-vs-4N
                   scaling-efficiency evidence -> BENCH/BASELINE.md)
 """
 
@@ -63,7 +63,7 @@ def _loadavg() -> float:
 
 
 def _wait_quiet(threshold: float | None = None) -> None:
-    """Co-tenant gate (same rule as tools/bench_scaling.py): don't start a
+    """Co-tenant gate (same rule as tools/exec_scaling.py): don't start a
     timed pass under a neighbour's burst; give up after a timeout so the
     bench always completes (load is logged per pass either way)."""
     if threshold is None:

@@ -16,8 +16,8 @@ from warchaeology_spark.functions.urls import (
     canonical_parts,
     canonicalize_py,
     canonicalize_url,
-    canonicalize_url_arrow,
     surt_key,
+    with_canonical,
     xxhash64_py,
 )
 
@@ -36,22 +36,27 @@ URLS = [
 
 
 def test_canonicalize_three_way_agreement(spark):
-    """JVM builtin path == Arrow UDF path == pure-Python oracle, on every
-    field the oracle returns (url_canon, surt, host)."""
-    df = spark.createDataFrame([(u,) for u in URLS], "url string")
+    """Nested JVM builders == staged JVM transform == pure-Python oracle,
+    on every field the oracle returns (url_canon, surt, host); the staged
+    transform keeps exactly the rows the oracle canonicalizes."""
+    df = spark.createDataFrame(list(enumerate(URLS)), "i int, url string")
     rows = df.select(
+        "i",
         "url",
         canonicalize_url("url").alias("canon"),
         surt_key("url").alias("surt"),
         canonical_parts("url")["host"].alias("host"),
-        canonicalize_url_arrow(F.col("url")).alias("arrow"),
     ).collect()
+    staged = {
+        r["i"]: tuple(r[1:])
+        for r in with_canonical(df, "url").select("i", "url_canon", "surt", "host").collect()
+    }
     for r in rows:
         py = canonicalize_py(r["url"])
         assert r["canon"] == (py[0] if py else None), r["url"]
         assert r["surt"] == (py[1] if py else None), r["url"]
         assert r["host"] == (py[2] if py else None), r["url"]
-        assert r["arrow"] == r["canon"], r["url"]
+        assert staged.get(r["i"]) == py, r["url"]
 
 
 def test_xxhash64_matches_spark(spark):

@@ -1,7 +1,7 @@
 """N-vs-4N EXECUTOR scaling evidence on one box (BASELINE.json north rule).
 
-tools/bench_scaling.py emulates the two-cluster-size criterion with
-local[4] vs local[16] — 4N THREADS in one JVM, which stacks two terms a
+A thread ladder emulates the two-cluster-size criterion with local[4]
+vs local[16] — 4N THREADS in one JVM, which stacks two terms a
 real cluster does not have against the 4N side: a single shared heap
 (allocation/GC contention for the string-heavy stages) and a single
 task-scheduler/broadcast endpoint. This harness runs the SAME kernel job

@@ -7,7 +7,7 @@ The frontier (north rule) additionally needs a *canonical* URL and a
 SURT-style sort/partition key.
 
 Canonicalization spec (every implementation here agrees with it on every
-input, backslashes included; the tests fuzz all four against each other):
+input, backslashes included; the tests fuzz all three against each other):
 
 1. trim; only ``http``/``https`` schemes are crawlable -> others yield NULL;
    scheme-relative ``//host/..`` and bare ``host/path`` get ``http://``.
@@ -28,8 +28,6 @@ Implementations:
   frontier and the bench.py kernel run, once per row. ``canonicalize_url``,
   ``surt_key`` and ``canonical_parts`` are the same stages substituted
   into one nested Column, for select lists (the registry, ``ls``).
-- ``canonicalize_url_arrow`` — the same spec as an Arrow-batched pandas
-  UDF, kept as the A/B candidate for the frontier's parse.
 - ``canonicalize_py`` — the pure-Python oracle used by the sequential
   crawl oracle.
 
@@ -41,10 +39,8 @@ from __future__ import annotations
 
 import functools
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 _SCHEME_RE = r"^([a-zA-Z][a-zA-Z0-9+.\-]*):"
 _AUTH_RE = r"^[a-zA-Z][a-zA-Z0-9+.\-]*://([^/?#]*)"
@@ -193,64 +189,6 @@ def canonicalize_url(url: Column | str) -> Column:
 def surt_key(url: Column | str) -> Column:
     """SURT-style key: ``com,example)/path?query`` (scheme dropped)."""
     return _canonical_fields(url)["surt"]
-
-
-# ---------------------------------------------------------------------------
-# Arrow-batched path (pandas UDF, vectorized str ops)
-# ---------------------------------------------------------------------------
-
-
-def _canonicalize_pd_strict(s: pd.Series) -> pd.Series:
-    """Spec-exact vectorized canonicalization: reproduces the JVM column
-    chain (and canonicalize_py) bit-for-bit on EVERY input, including the
-    component-regex quirks — userinfo strips greedily to the LAST ``@``,
-    the query is the first ``?`` ANYWHERE (even after a ``#``), a port is
-    only digits running to the end of the authority. One multi-group
-    extract for scheme/auth/path + short vectorized passes over the
-    authority — the Arrow-side step-1 candidate (A/B: BENCH/ab_parse.json).
-    """
-    t = s.fillna("").str.strip(" ")  # ASCII space only = Spark trim()
-    has_scheme = t.str.match(_SCHEME_RE)
-    protocol_rel = t.str.match(r"^//")
-    t = t.mask(protocol_rel, "http:" + t)
-    t = t.mask(~has_scheme & ~protocol_rel, "http://" + t)
-    m = t.str.extract(r"^([a-zA-Z][a-zA-Z0-9+.\-]*)://([^/?#]*)([^?#]*)")
-    scheme = m[0].str.lower().fillna("")
-    auth = m[1].fillna("")
-    hostport = auth.str.replace(r"^.*@", "", regex=True)  # greedy: last @
-    host = (
-        hostport.str.split(":", n=1).str[0].str.lower()
-        .str.replace(r"\.$", "", regex=True)
-    )
-    port = hostport.str.extract(r":([0-9]+)$")[0].fillna("")
-    port = port.mask(
-        ((scheme == "http") & (port == "80")) | ((scheme == "https") & (port == "443")),
-        "",
-    )
-    path = m[2].fillna("")
-    path = path.mask(path == "", "/")
-    query = t.str.extract(_QUERY_RE)[0].fillna("")  # re.search semantics
-    qsorted = query.str.split("&").map(
-        lambda xs: "&".join(sorted(x for x in xs if x)) if isinstance(xs, list) else ""
-    )
-    canon = (
-        scheme + "://" + host
-        + (":" + port).where(port != "", "")
-        + path
-        + ("?" + qsorted).where(qsorted != "", "")
-    )
-    ok = scheme.isin(["http", "https"]) & (host != "") & host.str.match(r"^[a-z0-9.\-]+$")
-    return canon.where(ok, None)
-
-
-@F.pandas_udf(T.StringType())
-def canonicalize_url_arrow(s: pd.Series) -> pd.Series:
-    """Spec-exact Arrow-batched canonicalization (_canonicalize_pd_strict):
-    bit-identical to the JVM ``canonicalize_url`` on every input
-    (property-fuzzed incl. backslashes), but one multi-group extract +
-    short authority passes instead of the ~10 per-component JVM regex
-    evaluations — BENCH/ab_parse.json decides which one step-1 uses."""
-    return _canonicalize_pd_strict(s)
 
 
 # ---------------------------------------------------------------------------
